@@ -26,10 +26,8 @@ import graft.model.DocsGen
   */
 object Bench {
 
-  // layout knobs (see BASELINE.md "bandwidth probe"): fused single-scan
-  // stats+sample and zstd input are the defaults; GRAFT_FUSED=0 /
-  // GRAFT_CODEC=snappy restore the round-1 layout for A/B comparison.
-  private val fused = sys.env.getOrElse("GRAFT_FUSED", "1") == "1"
+  // input codec (see BASELINE.md "bandwidth probe"): zstd is the default;
+  // GRAFT_CODEC=snappy restores the round-1 input for A/B comparison.
   private val codec = sys.env.getOrElse("GRAFT_CODEC", "zstd")
 
   /** Set by main before the first session when the run needs a stable
@@ -100,22 +98,19 @@ object Bench {
   /** The timed unit: the full validation pass over a pre-committed snapshot
     * (or bucketed catalog table — `readDocs` owns the layout). */
   private def fullPass(spark: SparkSession, readDocs: SparkSession => org.apache.spark.sql.DataFrame,
-                       ref: RefState, outDir: String, nDocs: Long): Long = {
+                       ref: RefState, outDir: String): Long = {
     import spark.implicits._
     val docs = readDocs(spark)
     val media = DocsGen.media(spark)
     // constant runId keeps the pass's plans literal-identical across runs, so
     // Spark's codegen cache is hit instead of recompiling ~10 plans per pass
     // (driver-side serial time that would otherwise dominate at small SF)
-    // explicit prefilter fraction (known docs/part) → sampling overlaps stats
-    val frac = math.min(1.0, 3.0 * 1000 * 18 / nDocs.toDouble)
     // violationsSink: each check's violation rows are written (src=<check>
     // subdirs) as soon as that check's counts land, overlapping the
     // remaining check phases — run() returns only after all writes finish
     val res = ValidationRun.run(docs, media, ref,
-      RunConfig(runId = "bench", maxSample = 1000, samplePrefilterFrac = frac,
-        fusedScan = fused, violationsSink = Some(s"$outDir/violations"),
-        concurrentChecks = sys.env.getOrElse("GRAFT_CONC", "1") == "1"))
+      RunConfig(runId = "bench", maxSample = 1000,
+        violationsSink = Some(s"$outDir/violations")))
     val (_, tV) = time(res.verdicts.write.mode("overwrite").parquet(s"$outDir/results"))
     ValidationRun.lastTimings.put("write_verdicts", tV)
     res.summaries.values.map(_.nDocs).sum
@@ -207,7 +202,7 @@ object Bench {
     }
 
     // ---- warm-up pass (discarded; JIT is process-wide)
-    fullPass(setup, readDocs, ref, s"$work/warm", nDocs)
+    fullPass(setup, readDocs, ref, s"$work/warm")
     val setupSec = elapsedS // generation + fit + warm-up (untimed overheads)
     var docsCounted = 0L
 
@@ -282,7 +277,7 @@ object Bench {
       val roundT0 = System.nanoTime()
       val hi = session(hiCores)
       val c0 = cpuSec()
-      val (n, tH) = time(fullPass(hi, readDocs, ref, s"$work/hi$i", nDocs))
+      val (n, tH) = time(fullPass(hi, readDocs, ref, s"$work/hi$i"))
       docsCounted = n
       if (tHis.isEmpty || tH < tHis.min) {
         bestPhases = ValidationRun.lastTimings.toMap
@@ -294,7 +289,7 @@ object Bench {
       rmrf(s"$work/hi$i")
       val lo = session(loCores)
       val c1 = cpuSec()
-      val tL = time(fullPass(lo, readDocs, ref, s"$work/lo$i", nDocs))._2
+      val tL = time(fullPass(lo, readDocs, ref, s"$work/lo$i"))._2
       if (tLos.isEmpty || tL < tLos.min) {
         bestPhasesLo = ValidationRun.lastTimings.toMap
         cpuLo = cpuSec() - c1
@@ -305,7 +300,7 @@ object Bench {
       rmrf(s"$work/lo$i")
       if (!skipN2) {
         val n2 = session(n2Cores)
-        tN2s ::= time(fullPass(n2, readDocs, ref, s"$work/n2_$i", nDocs))._2
+        tN2s ::= time(fullPass(n2, readDocs, ref, s"$work/n2_$i"))._2
         n2.stop()
         rmrf(s"$work/n2_$i")
       }
@@ -360,7 +355,7 @@ object Bench {
     val cpuFields =
       s""""cpu_util_hi":${r3(cpuHi / (tHi * hiCores))},"cpu_util_lo":${r3(cpuLo / (tLo * loCores))},"cpu_sec_hi":${r3(cpuHi)},"cpu_sec_lo":${r3(cpuLo)},"""
     val jsonLine =
-      s"""{"metric":"validated docs/sec (full constraint+drift pass)","value":${math.rint(thrHi)},"unit":"docs/sec","queries":$queries,"sf":"$sfDir","docs":$docsCounted,"cores_hi":$hiCores,"cores_lo":$loCores,"fused":$fused,"codec":"$codec","setup_sec":${r3(setupSec)},"gen_sec":${r3(genSec)},"scenario":"${sys.env.getOrElse("GRAFT_SCENARIO", "golden")}","layout":"$layout","throughput_hi_docs_per_sec":${math.rint(thrHi)},"throughput_lo_docs_per_sec":${math.rint(thrLo)},"scaling_efficiency_lo_to_hi":${r3(eff)},$n2Fields$cpuFields"membw_gbps_lo_threads":${r3(membwLo)},"membw_gbps_hi_threads":${r3(membwHi)},"mmd_fanout_sec_hi":${r3(tMmdHi)},"mmd_fanout_sec_lo":${r3(tMmdLo)},"compute_scaling_efficiency":${r3(effMmd)}}"""
+      s"""{"metric":"validated docs/sec (full constraint+drift pass)","value":${math.rint(thrHi)},"unit":"docs/sec","queries":$queries,"sf":"$sfDir","docs":$docsCounted,"cores_hi":$hiCores,"cores_lo":$loCores,"fused":true,"codec":"$codec","setup_sec":${r3(setupSec)},"gen_sec":${r3(genSec)},"scenario":"${sys.env.getOrElse("GRAFT_SCENARIO", "golden")}","layout":"$layout","throughput_hi_docs_per_sec":${math.rint(thrHi)},"throughput_lo_docs_per_sec":${math.rint(thrLo)},"scaling_efficiency_lo_to_hi":${r3(eff)},$n2Fields$cpuFields"membw_gbps_lo_threads":${r3(membwLo)},"membw_gbps_hi_threads":${r3(membwHi)},"mmd_fanout_sec_hi":${r3(tMmdHi)},"mmd_fanout_sec_lo":${r3(tMmdLo)},"compute_scaling_efficiency":${r3(effMmd)}}"""
     println(jsonLine)
     // ALSO write the metric line to a bare file: under sbt the stdout line
     // drowns in interleaved Spark stderr noise and the driver's tail-parse

@@ -410,14 +410,19 @@ object ConstraintChecks {
     val dangling = refs
       .join(if (broadcastMedia) broadcast(cat) else cat, Seq("media_ref"), "left_anti")
       .cache()
-    val violations = dangling
-      .select(lit(runId).as("run_id"), $"part",
-        lit("ref_media").as("check_id"), $"doc_id",
-        concat(lit("dangling media_ref "), $"media_ref").as("detail"))
-      .as[Violation]
-    val perPart = dangling.groupBy($"part").count()
-      .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
-    (violations, perPart)
+    try {
+      val perPart = dangling.groupBy($"part").count()
+        .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
+      val violations = dangling
+        .select(lit(runId).as("run_id"), $"part",
+          lit("ref_media").as("check_id"), $"doc_id",
+          concat(lit("dangling media_ref "), $"media_ref").as("detail"))
+        .as[Violation]
+        // materialize rows while the cache is alive: a cached plan left
+        // registered would be re-listed by every later write to its path
+        .localCheckpoint(true)
+      (violations, perPart)
+    } finally dangling.unpersist()
   }
 
   /** Span-order + null-kind integrity (the order-significance invariant —
@@ -589,24 +594,27 @@ object ConstraintChecks {
       .withColumn("ord", ($"fl".bitwiseAND(graft.functions.SpanFlags.OrdBit)) =!= 0)
       .withColumn("nk", ($"fl".bitwiseAND(graft.functions.SpanFlags.NullKindBit)) =!= 0)
       .cache()
-    val violations = flagged
-      .select($"part", $"doc_id", explode(filter(array(
-        when($"ord", "span_order").otherwise(lit(null).cast("string")),
-        when($"nk", "null_kind").otherwise(lit(null).cast("string"))),
-        x => x.isNotNull)).as("check_id"))
-      .select(lit(runId).as("run_id"), $"part", $"check_id", $"doc_id",
-        when($"check_id" === "span_order", "non-monotone span offsets")
-          .otherwise("span with null kind").as("detail"))
-      .as[Violation]
-    val perPartCheck = flagged
-      .groupBy($"part")
-      .agg(sum(when($"ord", 1L).otherwise(0L)).as("n_ord"),
-        sum(when($"nk", 1L).otherwise(0L)).as("n_nk"))
-      .collect()
-      .flatMap(r => Seq((r.getInt(0), "span_order") -> r.getLong(1),
-        (r.getInt(0), "null_kind") -> r.getLong(2)))
-      .toMap
-    (violations, perPartCheck)
+    try {
+      val perPartCheck = flagged
+        .groupBy($"part")
+        .agg(sum(when($"ord", 1L).otherwise(0L)).as("n_ord"),
+          sum(when($"nk", 1L).otherwise(0L)).as("n_nk"))
+        .collect()
+        .flatMap(r => Seq((r.getInt(0), "span_order") -> r.getLong(1),
+          (r.getInt(0), "null_kind") -> r.getLong(2)))
+        .toMap
+      val violations = flagged
+        .select($"part", $"doc_id", explode(filter(array(
+          when($"ord", "span_order").otherwise(lit(null).cast("string")),
+          when($"nk", "null_kind").otherwise(lit(null).cast("string"))),
+          x => x.isNotNull)).as("check_id"))
+        .select(lit(runId).as("run_id"), $"part", $"check_id", $"doc_id",
+          when($"check_id" === "span_order", "non-monotone span offsets")
+            .otherwise("span with null kind").as("detail"))
+        .as[Violation]
+        .localCheckpoint(true)
+      (violations, perPartCheck)
+    } finally flagged.unpersist()
   }
 
   /** Functional-dependency check (E28): violations of `lhs → rhs` — lhs

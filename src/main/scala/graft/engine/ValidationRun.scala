@@ -3,6 +3,7 @@ package graft.engine
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.checks._
+import graft.sketch.DocStatsAgg.{ModeBoth, ModeStats}
 import graft.model.DocsGen
 
 /** Run configuration. α defaults to the reference's offline-eval value 0.01
@@ -14,8 +15,8 @@ case class RunConfig(
     randomState: Long = 31L,
     maxSample: Int = 2000,
     // consumed ONLY by the distributedMmd leg (thins the by-part sample
-    // shuffle); the default paths select samples inside the fused scan's
-    // bounded buffer and need no prefilter. Tune with >=3x margin
+    // shuffle); the default path selects samples inside the fused scan's
+    // bounded buffer and needs no prefilter. Tune with >=3x margin
     // (maxSample x 3 / docsPerPart) — too tight truncates small parts'
     // samples vs the default path.
     samplePrefilterFrac: Double = 1.0,
@@ -26,18 +27,12 @@ case class RunConfig(
     // bought a second full shuffle and nothing else. Salted variant stays
     // selectable (the E13 skew operator; right for non-combinable aggs).
     salts: Int = 0,
-    fusedScan: Boolean = false,
     // when set, each check's violation rows are written to
     // <sink>/src=<check>/ AS SOON AS that check's counts are known, from the
     // same driver threads that ran the check — the (potentially large)
     // violation materialization then overlaps the remaining check phases
     // instead of serializing after them. run() returns after all writes.
     violationsSink: Option[String] = None,
-    // false = run the check jobs one after another, each getting the whole
-    // cluster to itself. On kernels where scheduler/futex pressure grows
-    // superlinearly with runnable threads, stacking concurrent jobs inflates
-    // TOTAL CPU; sequential trades tail idle-time for uninflated work.
-    concurrentChecks: Boolean = true,
     // echo the bounded feature sample each MMD verdict consumed into its
     // Verdict.input_values — parity with the reference's
     // `return_input_values` (detector_api/app/schemas/drift.py:13,
@@ -53,9 +48,9 @@ case class RunConfig(
     // true: the MMD check runs fully distributed (DriftChecks.mmdDistributed)
     // — per-part samples are selected and consumed executor-side, so no
     // sample bytes transit the driver. For snapshots with 10^4+ partitions;
-    // implies the split (non-fused) scan layout for the MMD leg, and
-    // echoInputValues has no samples to echo. Verdicts are identical to the
-    // default path (spec-asserted).
+    // the fused scan then skips sampling (ModeStats) but still carries the
+    // stats and referential counting, and echoInputValues has no samples to
+    // echo. Verdicts are identical to the default path (spec-asserted).
     distributedMmd: Boolean = false,
     // referential-path AUTO-selection bound (E6): when run()'s
     // broadcastMedia is left None, the media catalog broadcasts only if its
@@ -94,13 +89,17 @@ case class RunConfig(
   * referential E6, span-order/sequence E14, and the four drift checks E7-E10,
   * emitting the reference-shaped verdict rows (E11) and violation rows.
   * Pass structure over the big table (everything else runs on tiny
-  * summaries):
-  *   1. stats pass   — explode+aggregate, sketches merged partial/final
-  *   2. sample pass  — bounded deterministic per-part feature sample (MMD)
-  *   3. uniqueness   — salted two-stage count on (doc_id)
-  *   4. referential  — anti-join of media spans vs catalog
-  *   5. span order   — narrow filter
-  * plus the permutation fan-out on broadcast samples (no table scan).
+  * summaries); independent jobs are submitted concurrently:
+  *   1. fused scan  — ONE DocStatsAgg pass (no explode) yields per-part
+  *      stats, the exact reference-grid offset CDF, span-order/null-kind
+  *      counts, the bounded deterministic MMD sample, and dangling-ref
+  *      counts probed against the broadcast media set
+  *   2. uniqueness  — one doc_id key exchange feeding one map pass (zero
+  *      exchanges on a doc_id-bucketed table)
+  *   3. violation rows — pruned rescans of the dirty partitions only
+  * plus the permutation fan-out on broadcast samples (no table scan). A
+  * catalog too big to broadcast moves referential off the scan into its own
+  * job (probe-side broadcast or shuffled anti-join).
   */
 object ValidationRun {
 
@@ -189,16 +188,11 @@ object ValidationRun {
     // pass's wall-clock is the max of the scan-bound phases, not their sum.
     // (Sequential submission leaves cores idle in every job's tail.)
 
-    // concurrentChecks=false degrades every Future below to inline
-    // execution in call order — one job at a time, full cluster each
-    def maybeFuture[T](body: => T): Future[T] =
-      if (cfg.concurrentChecks) Future(body) else Future.successful(body)
-
     // eager per-check violation writes (no-op without a sink)
     val sinkWrites = new java.util.concurrent.ConcurrentLinkedQueue[Future[Unit]]()
     def sinkWrite(name: String, ds: => Dataset[Violation]): Unit =
       cfg.violationsSink.foreach { sink =>
-        sinkWrites.add(maybeFuture(timed(s"write_viol_$name")(
+        sinkWrites.add(Future(timed(s"write_viol_$name")(
           ds.write.mode("overwrite").parquet(s"$sink/src=$name"))))
       }
 
@@ -214,45 +208,44 @@ object ValidationRun {
       sinkWrite("schema", spark.createDataset(viol))
     }
 
-    // 3. uniqueness (violations stay distributed). AUTO layout selection:
+    // 2. uniqueness (violations stay distributed). AUTO layout selection:
     // a doc_id-bucketed snapshot (BucketedTables) runs the zero-exchange
     // groupBy — the pass's critical-path shuffle disappears on tables that
     // paid it at ingest; any other layout takes the single-shuffle
     // hash-pair aggregation.
-    val fUniq = maybeFuture(timed("uniqueness") {
+    val fUniq = Future(timed("uniqueness") {
       val r = ConstraintChecks.uniquenessAuto(docs, cfg.runId, cfg.salts)
       sinkWrite("unique", r._1)
       r
     })
-    // 4. referential (E6). Three layouts, auto-laddered:
-    //  - fused + broadcastable catalog: dangling-ref COUNTING rides the stats
-    //    scan (broadcast media set checked inside DocStatsAgg) — no separate
-    //    pass over the table; violation ROWS are materialized afterwards from
-    //    the dirty partitions only (partition-pruned anti-join, zero-cost on
-    //    a clean table).
+    // referential (E6). Three layouts, auto-laddered:
+    //  - broadcastable catalog: dangling-ref COUNTING rides the fused scan
+    //    (broadcast media set checked inside DocStatsAgg) — no separate pass
+    //    over the table; violation ROWS are materialized afterwards from the
+    //    dirty partitions only (partition-pruned probe of the same set,
+    //    zero-cost on a clean table).
     //  - catalog too big to broadcast but the DOCS side is small (incremental
     //    runs over appended partitions vs a 10^9-row catalog): PROBE-SIDE
     //    broadcast — the referenced set broadcasts into one narrow catalog
     //    scan, the catalog never shuffles.
     //  - both sides big: shuffled anti-join (AQE converts/splits at runtime).
-    val fuseRef = cfg.fusedScan && useBroadcastMedia
-    val fRef = if (fuseRef) None else Some(maybeFuture(timed("referential") {
-      val probeSide = !useBroadcastMedia &&
+    val fRef = if (useBroadcastMedia) None else Some(Future(timed("referential") {
+      val probeSide =
         docs.select("doc_id").queryExecution.optimizedPlan.stats.sizeInBytes <=
           BigInt(cfg.mediaBroadcastMaxBytes)
       val r = if (probeSide) {
         log.info("referential path: catalog over the broadcast bound but the " +
           "docs side is small - probe-side broadcast (catalog never shuffles)")
         ConstraintChecks.referentialProbeSide(docs, media, cfg.runId)
-      } else ConstraintChecks.referential(docs, media, cfg.runId, useBroadcastMedia)
+      } else ConstraintChecks.referential(docs, media, cfg.runId, broadcastMedia = false)
       sinkWrite("ref", r._1)
       r
     }))
-    val mediaSet = if (fuseRef) Some(PartStats.broadcastMediaSet(media)) else None
+    val mediaSet = if (useBroadcastMedia) Some(PartStats.broadcastMediaSet(media)) else None
 
     // opt-in E43: one broadcast join, O(parts) counts back, row evidence to
     // the sink like every other constraint check
-    val fKind = if (!cfg.kindConsistency) None else Some(maybeFuture(
+    val fKind = if (!cfg.kindConsistency) None else Some(Future(
       timed("kind_consistency") {
         val counts = ConstraintChecks.kindConsistency(docs, media)
           .collect().map(r => r.getInt(0) -> r.getLong(2)).toMap
@@ -270,9 +263,9 @@ object ValidationRun {
         if (counts.isEmpty) spark.emptyDataset[Violation]
         else ConstraintChecks.referentialRows(
           docs.filter($"part".isin(counts.keys.toSeq: _*)), media, cfg.runId,
-          // refViolOf only runs on the fused path, where the broadcast set
-          // exists — rows then share the COUNTING scan's membership
-          // predicate (one codegen'd probe stage, no per-job join build)
+          // refViolOf only runs when the broadcast set exists — rows then
+          // share the COUNTING scan's membership predicate (one codegen'd
+          // probe stage, no per-job join build)
           mediaSet)
       (viol, counts)
     }
@@ -284,17 +277,12 @@ object ValidationRun {
       else ConstraintChecks.spanIntegrityRows(docs.filter($"part".isin(dirty: _*)), cfg.runId)
     }
 
-    // 1+2. stats and MMD-sampling both run through the custom DocStatsAgg
-    // (one scan each, no explode). Two layouts, both bandwidth-motivated:
-    //  - fusedScan: ONE scan computes stats AND samples (ModeBoth) — half the
-    //    kind/offset bytes read; the MMD fan-out (pure compute on broadcast
-    //    samples) chains after it. Best when scans are bandwidth-bound.
-    //  - split: two CONCURRENT jobs — sampling is the light one, so the MMD
-    //    fan-out starts while the heavy stats scan is still running; the
-    //    critical path is max(stats, sample+mmd), not a chain.
-    // the fitted reference's exact CDF grid rides the stats scan (fixed-edge
-    // integer bin counts) so the KS/PSI verdicts are parallelism-invariant;
-    // empty when the fit ran without the grid (KLL fallback)
+    // 1. ONE DocStatsAgg scan computes stats AND the MMD samples (ModeBoth,
+    // no explode); the MMD fan-out (pure compute on broadcast samples)
+    // chains after it. The fitted reference's exact CDF grid rides the scan
+    // (fixed-edge integer bin counts) so the KS/PSI verdicts are
+    // parallelism-invariant; empty when the fit ran without the grid (KLL
+    // fallback)
     val refEdges: Seq[Double] = ref.offsetEdges.toSeq
     def fused(mode: Int, ms: Option[org.apache.spark.broadcast.Broadcast[graft.sketch.LongHashSet]])
         : (Map[Int, PartSummary], Map[Int, Array[Array[Double]]]) =
@@ -304,54 +292,43 @@ object ValidationRun {
         case None => PartStats.computeFused(docs, cfg.maxSample, mode, ms, edges = refEdges)
       }
 
-    val (summaries, samples, mmdVerdicts) = if (cfg.distributedMmd) {
-      // distributed MMD leg runs concurrently with the stats scan; samples
-      // never reach the driver (the samples map stays empty)
-      val fMmd = maybeFuture(timed("mmd_distributed")(
-        DriftChecks.mmdDistributed(spark, docs, ref, cfg.runId, cfg.alpha,
-          cfg.maxSample, cfg.samplePrefilterFrac,
-          cfg.numPermutations, cfg.randomState)))
-      val (sm, _) = timed("stats")(fused(graft.sketch.DocStatsAgg.ModeStats,
-        if (cfg.fusedScan) mediaSet else None))
-      if (fuseRef) sinkWrite("ref", refViolOf(sm)._1)
-      sinkWrite("integrity", intViolOf(sm))
-      val mv = Await.result(fMmd, Duration.Inf)
-      // a prefilter tuned too tight can leave a small part with ZERO
-      // surviving sample rows — it then emits no row from the fan-out.
-      // Fill in a LOUD empty-sample verdict (passed, no drift evidence)
-      // so every part still gets its mmd_features row, like the default
-      // path guarantees.
-      val present = mv.map(_.part).toSet
-      val filled = mv ++ (sm.keySet -- present).toSeq.sorted.map { p =>
-        log.warn(s"distributedMmd: part $p had no sample survivors " +
-          "(samplePrefilterFrac too tight for its size?) - emitting empty-sample verdict")
-        Verdict.now(cfg.runId, p, "mmd_features", cfg.alpha, 0.0, 1.0, Some(true),
-          Map("n_prod" -> 0.0, "empty_sample" -> 1.0,
-            "permutations" -> cfg.numPermutations.toDouble), ref.snapshotId)
-      }
-      (sm, Map.empty[Int, Array[Array[Double]]], filled)
-    } else if (cfg.fusedScan) {
-      val (sm, sp) = timed("stats")(fused(graft.sketch.DocStatsAgg.ModeBoth, mediaSet))
-      // launch the stats-derived violation writes BEFORE the MMD fan-out so
-      // the dirty-partition rescans overlap it (and the uniqueness tail).
-      // ref rows come from the fused counts ONLY when the referential check
-      // actually rode this scan — otherwise the standalone fRef future owns
-      // src=ref and writing an empty overwrite here would clobber it
-      if (fuseRef) sinkWrite("ref", refViolOf(sm)._1)
-      sinkWrite("integrity", intViolOf(sm))
-      val mv = timed("mmd_fanout")(DriftChecks.mmd(spark, cfg.runId, cfg.alpha, ref,
-        sp, cfg.numPermutations, cfg.randomState))
-      (sm, sp, mv)
-    } else {
-      val fSampleMmd = maybeFuture {
-        val sp = timed("mmd_sample")(fused(graft.sketch.DocStatsAgg.ModeSample, None)._2)
-        timed("mmd_fanout")(DriftChecks.mmd(spark, cfg.runId, cfg.alpha, ref, sp,
-          cfg.numPermutations, cfg.randomState)) -> sp
-      }
-      val (sm, _) = timed("stats")(fused(graft.sketch.DocStatsAgg.ModeStats, None))
-      sinkWrite("integrity", intViolOf(sm))
-      val (mv, sp) = Await.result(fSampleMmd, Duration.Inf)
-      (sm, sp, mv)
+    // distributedMmd: the MMD leg selects and consumes its samples
+    // executor-side, concurrently with a sample-free scan; samples never
+    // reach the driver (the samples map stays empty)
+    val fMmdDist = if (!cfg.distributedMmd) None else Some(Future(timed("mmd_distributed")(
+      DriftChecks.mmdDistributed(spark, docs, ref, cfg.runId, cfg.alpha,
+        cfg.maxSample, cfg.samplePrefilterFrac,
+        cfg.numPermutations, cfg.randomState))))
+    val (summaries, samples) = timed("stats") {
+      if (cfg.distributedMmd) (fused(ModeStats, mediaSet)._1, Map.empty[Int, Array[Array[Double]]])
+      else fused(ModeBoth, mediaSet)
+    }
+    // launch the stats-derived violation writes BEFORE the MMD fan-out so
+    // the dirty-partition rescans overlap it (and the uniqueness tail). ref
+    // rows come from the scan's counts ONLY when referential rode it —
+    // otherwise the standalone fRef future owns src=ref and an empty
+    // overwrite here would clobber it
+    if (useBroadcastMedia) sinkWrite("ref", refViolOf(summaries)._1)
+    sinkWrite("integrity", intViolOf(summaries))
+    val mmdVerdicts = fMmdDist match {
+      case None =>
+        timed("mmd_fanout")(DriftChecks.mmd(spark, cfg.runId, cfg.alpha, ref,
+          samples, cfg.numPermutations, cfg.randomState))
+      case Some(f) =>
+        val mv = Await.result(f, Duration.Inf)
+        // a prefilter tuned too tight can leave a small part with ZERO
+        // surviving sample rows — it then emits no row from the fan-out.
+        // Fill in a LOUD empty-sample verdict (passed, no drift evidence)
+        // so every part still gets its mmd_features row, like the default
+        // path guarantees.
+        val present = mv.map(_.part).toSet
+        mv ++ (summaries.keySet -- present).toSeq.sorted.map { p =>
+          log.warn(s"distributedMmd: part $p had no sample survivors " +
+            "(samplePrefilterFrac too tight for its size?) - emitting empty-sample verdict")
+          Verdict.now(cfg.runId, p, "mmd_features", cfg.alpha, 0.0, 1.0, Some(true),
+            Map("n_prod" -> 0.0, "empty_sample" -> 1.0,
+              "permutations" -> cfg.numPermutations.toDouble), ref.snapshotId)
+        }
     }
     val parts = summaries.keys.toSeq.sorted
 

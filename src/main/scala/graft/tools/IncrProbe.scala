@@ -57,8 +57,7 @@ object IncrProbe {
 
     val ref = Fit.fit(SnapshotCatalog.read(spark, table, s1.snapshotId)
       .filter($"part" === 0).limit(200000), snapshotId = s2.snapshotId, maxSample = 1000)
-    val cfg = RunConfig(runId = "incr", maxSample = 1000, numPermutations = 100,
-      fusedScan = true)
+    val cfg = RunConfig(runId = "incr", maxSample = 1000, numPermutations = 100)
 
     def timed[T](name: String)(f: => T): (T, Double) = {
       val (u0, sy0) = ProcStat.cpuTimes()

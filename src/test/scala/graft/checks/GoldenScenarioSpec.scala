@@ -111,25 +111,47 @@ class GoldenScenarioSpec extends AnyFunSuite {
   }
 
   test("fused scan (stats+sample+referential in one pass) matches the split path") {
-    val fused = ValidationRun.run(docs, media, ref,
-      RunConfig(runId = "golden-fused", alpha = 0.01, maxSample = 600,
-        numPermutations = 50, fusedScan = true))
-    val fv = fused.verdicts.collect().map(v => (v.part, v.check_id) -> v).toMap
-    // every check is bit-identical across the two layouts — ks/psi included,
-    // since their CDFs are exact integer sums at the fitted reference grid
-    // (merge-order-invariant, unlike the KLL ranks they replaced)
-    verdicts.keys.foreach { k =>
-      val (a, b) = (verdicts(k), fv(k))
-      assert(a.distance == b.distance, s"$k distance ${a.distance} vs ${b.distance}")
-      assert(a.p_value == b.p_value, s"$k p ${a.p_value} vs ${b.p_value}")
-      assert(a.passed == b.passed && a.is_drift == b.is_drift, s"$k verdict flags")
+    // the run's one scan (ModeBoth) must do exactly the work of a stats-only
+    // (ModeStats) plus a sample-only (ModeSample) scan, so those standalone
+    // scans measure their share of the pass. One input partition and at
+    // most 160 spans per part keep every KLL sketch below its first
+    // compaction, so the digests are bit-deterministic
+    val small = DocsGen.docs(spark, 360, specs).coalesce(1).cache()
+    val edges = ref.offsetEdges.toSeq
+    val ms = Some(PartStats.broadcastMediaSet(media))
+    import graft.sketch.DocStatsAgg.{ModeBoth, ModeSample, ModeStats}
+    val (bothSum, bothSam) = PartStats.computeFused(small, 8, ModeBoth, ms, edges)
+    val (statSum, _) = PartStats.computeFused(small, 8, ModeStats, ms, edges)
+    val (_, sampSam) = PartStats.computeFused(small, 8, ModeSample, None, edges)
+    assert(bothSum.keySet == statSum.keySet && bothSum.size == specs.size)
+    bothSum.foreach { case (p, b) =>
+      val s = statSum(p)
+      assert(b.nDocs == s.nDocs && b.nSpans == s.nSpans &&
+        b.approxDistinctDocIds == s.approxDistinctDocIds &&
+        b.nullKindSpans == s.nullKindSpans && b.kindHist == s.kindHist &&
+        b.ordViolationDocs == s.ordViolationDocs && b.nullKindDocs == s.nullKindDocs &&
+        b.danglingRefSpans == s.danglingRefSpans && b.danglingRefDocs == s.danglingRefDocs,
+        s"part $p counters")
+      assert(b.offsetKll.sameElements(s.offsetKll), s"part $p KLL bytes")
+      assert(b.offsetEdgeCounts.nonEmpty && b.offsetEdgeCounts.sameElements(s.offsetEdgeCounts),
+        s"part $p CDF bins")
     }
-    // dangling violation rows materialize identically from the pruned rescan
-    val fViol = fused.violations.filter($"check_id" === "ref_media")
-      .select("doc_id", "detail").collect().map(r => (r.getString(0), r.getString(1))).sorted
-    val sViol = results.violations.filter($"check_id" === "ref_media")
-      .select("doc_id", "detail").collect().map(r => (r.getString(0), r.getString(1))).sorted
-    assert(fViol.nonEmpty && fViol.sameElements(sViol))
+    // the dangling fixture's counts ride the scan
+    assert(bothSum(16).danglingRefSpans > 0)
+    def bits(rows: Array[Array[Double]]) =
+      rows.map(_.map(java.lang.Double.doubleToRawLongBits).toSeq).toSeq
+    assert(bothSam.keySet == sampSam.keySet)
+    bothSam.foreach { case (p, rows) =>
+      assert(rows.nonEmpty && bits(rows) == bits(sampSam(p)), s"part $p sample")
+    }
+    small.unpersist()
+    // the run's ref rows (broadcast-set probe over the dirty parts) equal
+    // the exact string anti-join over the whole table
+    val runRows = results.violations.filter($"check_id" === "ref_media")
+      .select("doc_id", "detail").as[(String, String)].collect().sorted
+    val joinRows = ConstraintChecks.referential(docs, media, "golden")._1
+      .select("doc_id", "detail").as[(String, String)].collect().sorted
+    assert(runRows.nonEmpty && runRows.sameElements(joinRows))
   }
 
   test("stats verdicts: counts and exact distinct (uniqueness byproduct)") {

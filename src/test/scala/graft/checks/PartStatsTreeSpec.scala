@@ -121,14 +121,19 @@ class MmdDistributedSpec extends AnyFunSuite {
     val docs = DocsGen.docs(spark, 900, DocsGen.goldenScenario)
     val media = DocsGen.media(spark)
     val ref = Fit.fit(docs.filter($"part" === 0), snapshotId = 1L, maxSample = 50)
-    def mmdVerd(cfg: graft.engine.RunConfig) =
+    // the distributed leg's stats scan also carries the broadcast media set
+    // and the span-integrity counts: those verdicts must match too
+    val checks = Set("mmd_features", "ref_media", "span_order", "null_kind")
+    def verd(cfg: graft.engine.RunConfig) =
       graft.engine.ValidationRun.run(docs, media, ref, cfg).verdicts.collect()
-        .filter(_.check_id == "mmd_features")
-        .map(v => (v.part, v.distance, v.p_value)).sortBy(_._1).toSeq
-    val a = mmdVerd(graft.engine.RunConfig(runId = "dflt", maxSample = 50))
-    val b = mmdVerd(graft.engine.RunConfig(runId = "dist", maxSample = 50,
+        .filter(v => checks(v.check_id))
+        .map(v => (v.check_id, v.part, v.distance, v.p_value, v.passed)).sorted.toSeq
+    val a = verd(graft.engine.RunConfig(runId = "dflt", maxSample = 50))
+    val b = verd(graft.engine.RunConfig(runId = "dist", maxSample = 50,
       distributedMmd = true))
-    assert(a.nonEmpty && a == b)
+    assert(checks.forall(c => a.exists(_._1 == c)))
+    assert(a.exists(v => v._1 == "ref_media" && !v._5), "dangling fixture must fail")
+    assert(a == b)
   }
 }
 

@@ -90,8 +90,7 @@ class EngineSpec extends AnyFunSuite {
     val docs = DocsGen.docs(spark, 3600, DocsGen.goldenScenario).cache()
     val media = DocsGen.media(spark)
     val ref = Fit.fit(docs.filter($"part" === 0), snapshotId = 9L, maxSample = 200)
-    val cfg = RunConfig(runId = "s1", maxSample = 200, numPermutations = 10,
-      fusedScan = true)
+    val cfg = RunConfig(runId = "s1", maxSample = 200, numPermutations = 10)
     val lazyRows = ValidationRun.run(docs, media, ref, cfg)
       .violations.collect().map(v => (v.check_id, v.part, v.doc_id)).sorted
     assert(lazyRows.nonEmpty)
@@ -102,33 +101,6 @@ class EngineSpec extends AnyFunSuite {
       .select("check_id", "part", "doc_id")
       .collect().map(r => (r.getString(0), r.getInt(1), r.getString(2))).sorted
     assert(sunk.toSeq == lazyRows.toSeq)
-    docs.unpersist()
-  }
-
-  test("concurrentChecks=false produces identical verdicts and sink rows") {
-    val tmp = Files.createTempDirectory("seq")
-    val docs = DocsGen.docs(spark, 3600, DocsGen.goldenScenario).cache()
-    val media = DocsGen.media(spark)
-    val ref = Fit.fit(docs.filter($"part" === 0), snapshotId = 11L, maxSample = 200)
-    val cfg = RunConfig(runId = "c1", maxSample = 200, numPermutations = 10,
-      fusedScan = true)
-    def strip(sink: String, c: RunConfig) = {
-      val r = ValidationRun.run(docs, media, ref, c.copy(violationsSink = Some(sink)))
-      val verdicts = r.verdicts.collect()
-        .map(v => (v.part, v.check_id, v.distance, v.p_value, v.passed)).sorted.toSeq
-      val rows = spark.read.parquet(sink).select("check_id", "part", "doc_id")
-        .collect().map(x => (x.getString(0), x.getInt(1), x.getString(2))).sorted.toSeq
-      (verdicts, rows)
-    }
-    val (va, ra) = strip(s"$tmp/a", cfg)
-    val (vb, rb) = strip(s"$tmp/b", cfg.copy(concurrentChecks = false))
-    assert(va.length == vb.length)
-    va.zip(vb).foreach { case ((p1, c1, d1, pv1, ps1), (p2, c2, d2, pv2, ps2)) =>
-      assert(p1 == p2 && c1 == c2)
-      // ks/psi included: the exact-CDF grid makes them merge-order-invariant
-      assert(d1 == d2 && pv1 == pv2 && ps1 == ps2, s"($p1,$c1): $d1/$pv1 vs $d2/$pv2")
-    }
-    assert(ra == rb && ra.nonEmpty)
     docs.unpersist()
   }
 
@@ -162,8 +134,7 @@ class EngineSpec extends AnyFunSuite {
     val docs = DocsGen.docs(spark, 1200, DocsGen.goldenScenario.take(4)).cache()
     val media = DocsGen.media(spark)
     val ref = Fit.fit(docs.filter($"part" === 0), snapshotId = 3L, maxSample = 200)
-    val cfg = RunConfig(runId = "auto", maxSample = 200, numPermutations = 10,
-      fusedScan = true)
+    val cfg = RunConfig(runId = "auto", maxSample = 200, numPermutations = 10)
     def refVerdicts(r: ValidationRun.Results) =
       r.verdicts.toDF().filter($"check_id" === "ref_media")
         .select($"part", $"distance", $"passed").as[(Int, Double, Boolean)]
@@ -188,5 +159,28 @@ class EngineSpec extends AnyFunSuite {
     }
     assert(ex.getMessage.contains("broadcast cap"))
     docs.unpersist()
+  }
+
+  test("a run leaves no cached plan behind: the shuffled referential path " +
+    "and spanIntegrity release their caches, rows stay readable") {
+    val g = DocsGen.goldenScenario
+    // control, a swap rung, the dangling and the null-kind fixtures; uncached
+    val docs = DocsGen.docs(spark, 1200, Seq(g(0), g(12), g(16), g(17)))
+    val media = DocsGen.media(spark)
+    val ref = Fit.fit(docs.filter($"part" === 0), snapshotId = 5L, maxSample = 200)
+    val cfg = RunConfig(runId = "leak", maxSample = 200, numPermutations = 10)
+    // suites share one session; start from an empty cache registry
+    spark.catalog.clearCache()
+    val cacheManager = spark.sharedState.cacheManager
+    // a zero byte bound sends referential to the shuffled anti-join
+    val res = ValidationRun.run(docs, media, ref, cfg.copy(mediaBroadcastMaxBytes = 0L))
+    assert(cacheManager.isEmpty, "run() left a cached plan registered")
+    val refViol = res.violations.filter($"check_id" === "ref_media").count()
+    val refCount = res.verdicts.filter($"check_id" === "ref_media")
+      .collect().map(_.distance).sum
+    assert(refViol > 0 && refViol == refCount.toLong)
+    val (intViol, intCounts) = graft.checks.ConstraintChecks.spanIntegrity(docs, "leak")
+    assert(cacheManager.isEmpty, "spanIntegrity left a cached plan registered")
+    assert(intCounts.values.sum > 0 && intViol.count() == intCounts.values.sum)
   }
 }

@@ -11,6 +11,8 @@ import json, os, subprocess, sys, tempfile, glob
 import duckdb
 import pandas as pd
 
+from fresh_classes import require_fresh_classes
+
 # The driver's DuckDB version is unknown to this repo; this emulator was
 # validated against the version below. The r04→r05 hardening made every
 # oracle integer-typed / explicitly-cast in its final projection, so the
@@ -21,6 +23,7 @@ print(f"[emulator] duckdb {duckdb.__version__}, pandas {pd.__version__}")
 SF = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
 ONLY = set(sys.argv[2:])
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+require_fresh_classes(REPO)
 OUT = tempfile.mkdtemp(prefix="graft-verify-")
 
 cp = f"{REPO}/target/scala-2.13/classes:" + ":".join(glob.glob("/opt/spark/jars/*.jar"))

@@ -12,8 +12,11 @@ import glob, os, subprocess, sys, tempfile
 import duckdb
 import pandas as pd
 
+from fresh_classes import require_fresh_classes
+
 SF = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+require_fresh_classes(REPO)
 
 cp = f"{REPO}/target/scala-2.13/classes:" + ":".join(glob.glob("/opt/spark/jars/*.jar"))
 opens = ("--add-opens java.base/java.lang=ALL-UNNAMED --add-opens java.base/java.lang.invoke=ALL-UNNAMED "
