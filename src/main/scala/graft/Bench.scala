@@ -227,8 +227,8 @@ object Bench {
     // parquet scans, which saturate this single box's memory bandwidth well
     // below 32 cores — a physical ceiling a real multi-node cluster does not
     // share (each executor node brings its own DRAM). This phase isolates
-    // the engine's task-parallel compute path (batched-bitmask permutation
-    // evaluation — sequential matrix streaming, compute-bound).
+    // the engine's task-parallel compute path (matrix-free permutation
+    // kernel: one kernel pass per 100-permutation chunk, compute-bound).
     val probeRef = ref.copy(refSample = ref.refSample.take(400))
     val probeSamples = (0 until 18).map(p => p -> probeRef.refSample).toMap
     def mmdProbe(s2: SparkSession): Double =

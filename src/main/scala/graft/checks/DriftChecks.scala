@@ -371,87 +371,6 @@ object DriftChecks {
     }
   }
 
-  /** MMD + permutation test (E10) on bounded per-partition feature samples vs
-    * the fitted reference sample — frouros MMD verbatim in semantics
-    * (fit: ml/training.py:131-147; compare: detector_api/app/detector.py:58-60;
-    * 100-permutation test seeded with random_state=31: ml/training.py:136-144).
-    *
-    * Distributed shape: samples are broadcast; `spark.range(parts × (P+1))`
-    * fans one task row per (partition, permutation); permId 0 is the observed
-    * statistic (identity split). Permutation seeds derive from (randomState,
-    * part, permId) so p-values are reproducible at any parallelism.
-    */
-  /** Executor-process-wide cache of pooled kernel matrices, keyed by
-    * (run token, part): all task threads in the JVM share ONE read-only
-    * matrix per partition instead of each building a private copy — the
-    * per-run working set drops from threads×matrix to parts×matrix (cache-
-    * resident), and rebuild cost is paid once per executor. The engine
-    * analog of the reference's per-process singleton detector cache
-    * (detector_api/app/utils.py:4-14).
-    *
-    * The token is a fresh UUID per mmd() call (broadcast ids are NOT unique
-    * across SparkContexts in one JVM — a bench's next session could collide
-    * and silently serve a previous run's matrices); a token change clears
-    * the cache wholesale, and an LRU bound caps residency so a snapshot with
-    * 10^5 partitions cannot OOM the executor. Cached tuple carries the
-    * chunk-invariant observed statistic too. */
-  private object KernelCache {
-    private val MaxEntries = 64
-    private final class Entry(val data: (Array[Float], Int, Double, Double)) {
-      val lastAccess = new java.util.concurrent.atomic.AtomicLong()
-    }
-    private val map = new java.util.concurrent.ConcurrentHashMap[(String, Int), Entry]
-    private val tick = new java.util.concurrent.atomic.AtomicLong()
-    @volatile private var currentToken = ""
-    def get(token: String, part: Int,
-            build: () => (Array[Float], Int, Double, Double)): (Array[Float], Int, Double, Double) = {
-      if (token != currentToken) synchronized {
-        if (token != currentToken) { map.clear(); currentToken = token }
-      }
-      // per-key build under the CHM bin lock (concurrent builds of DIFFERENT
-      // parts proceed in parallel; same part builds once)
-      val e = map.computeIfAbsent((token, part), _ => new Entry(build()))
-      e.lastAccess.set(tick.incrementAndGet())
-      // true LRU eviction on overflow: drop only the LEAST-recently-touched
-      // entries, so with >MaxEntries parts resident the working set of
-      // actively-chunking tasks survives (a wholesale clear here caused
-      // O(n²) rebuild storms at 10^5 partitions). Evicted matrices already
-      // handed to a task remain valid — eviction only unlinks from the map.
-      if (map.size() > MaxEntries) synchronized {
-        while (map.size() > MaxEntries) {
-          var oldestKey: (String, Int) = null
-          var oldestTick = Long.MaxValue
-          map.forEach { (k, v) =>
-            val t = v.lastAccess.get()
-            if (t < oldestTick) { oldestTick = t; oldestKey = k }
-          }
-          if (oldestKey != null) map.remove(oldestKey) else return e.data
-        }
-      }
-      e.data
-    }
-  }
-
-  /** EXACT (unsampled) MMD distance between the fitted reference sample and
-    * EVERY doc of each partition — the engine's answer to the reference's
-    * chunked exact kernel (ml/training.py:145,505-507: `chunk_size=200`
-    * bounds kernel memory while comparing the full batch) for users who want
-    * the exact statistic on a moderate batch instead of the bounded-sample
-    * estimate.
-    *
-    * Distributed shape: the full partition is featurized executor-side with
-    * the SAME per-doc featurizer as the sampled path
-    * (`DocStatsAgg.featuresOf`), collected (48 B/doc — the `maxRows` guard
-    * bounds this; ~10⁶ rows ≈ 50 MB), broadcast back, and the O(n²) kernel
-    * work fans out as BLOCK-PAIR tasks (`Mmd.kernelBlockSum`) across all
-    * partitions in one job — no (m+n)² kernel matrix materializes anywhere;
-    * each task streams one block pair in O(blockSize²) flops with O(1)
-    * extra memory. p-values still come from the sampled permutation path
-    * ([[mmd]]); an exact permutation test would cost numPermutations× this.
-    *
-    * Returns part → exact MMD distance (√max(mmd²,0), unbiased estimator —
-    * identical semantics to [[Mmd.distance]]).
-    */
   /** E22: Pearson-correlation shift between two numeric columns across
     * windows — the STRUCTURAL drift the marginal tests cannot see (both
     * marginals can be unchanged while the joint distribution rotates;
@@ -727,6 +646,26 @@ object DriftChecks {
     spark.createDataFrame(spark.sparkContext.parallelize(rows.toSeq, 1), schema)
   }
 
+  /** EXACT (unsampled) MMD distance between the fitted reference sample and
+    * EVERY doc of each partition — the engine's answer to the reference's
+    * chunked exact kernel (ml/training.py:145,505-507: `chunk_size=200`
+    * bounds kernel memory while comparing the full batch) for users who want
+    * the exact statistic on a moderate batch instead of the bounded-sample
+    * estimate.
+    *
+    * Distributed shape: the full partition is featurized executor-side with
+    * the SAME per-doc featurizer as the sampled path
+    * (`DocStatsAgg.featuresOf`), collected (48 B/doc — the `maxRows` guard
+    * bounds this; ~10⁶ rows ≈ 50 MB), broadcast back, and the O(n²) kernel
+    * work fans out as BLOCK-PAIR tasks (`Mmd.kernelBlockSum`) across all
+    * partitions in one job — no (m+n)² kernel matrix materializes anywhere;
+    * each task streams one block pair in O(blockSize²) flops with O(1)
+    * extra memory. p-values still come from the sampled permutation path
+    * ([[mmd]]); an exact permutation test would cost numPermutations× this.
+    *
+    * Returns part → exact MMD distance (√max(mmd²,0), unbiased estimator —
+    * identical semantics to [[Mmd.distance]]).
+    */
   def mmdExactDistance(spark: SparkSession, docs: org.apache.spark.sql.DataFrame,
                        ref: RefState, maxRows: Int = 1 << 20,
                        blockSize: Int = 2048): Map[Int, Double] = {
@@ -797,17 +736,19 @@ object DriftChecks {
     * Shape: ONE shuffle groups the hash-prefiltered candidate rows by part;
     * each part's task replays the fused scan's exact bounded selection
     * (maxSample smallest (hash, features) — `DocStatsBuffer.SampleOrd`),
-    * builds the pooled kernel matrix once, evaluates all permutations with
-    * the same batched-bitmask kernel sums and the same
-    * (randomState, part, permId) seeds, and emits ONE scalar row. Driver
+    * evaluates the observed split and all permutations in one
+    * [[Mmd.permutationStats]] pass with the same (randomState, part, permId)
+    * seeds as [[mmd]], and emits ONE scalar row. Driver
     * traffic is O(parts) scalars. Verdicts are IDENTICAL to the
     * collect-broadcast path on the same input and prefilter (spec).
     *
     * The parallelism unit is the part (one task owns a part's whole
     * permutation loop) — right when parts ≫ cores, exactly the regime this
     * path exists for; at small part counts [[mmd]]'s chunk fan-out spreads
-    * better. Executor memory per task: the (m + maxSample)² × 4 B kernel
-    * matrix (16 MB at 1000+1000) plus an O(maxSample) selection heap —
+    * better. Executor memory per task: the O(maxSample) selection heap,
+    * the pooled sample, and the permutation kernel's O(m + maxSample) row
+    * state plus one (m + maxSample)-int index order and bitset per
+    * permutation (about 0.4 MB per 100 permutations at 1000+1000) —
     * bounded even at `prefilterFrac = 1.0`; the prefilter's job here is
     * only to thin the by-part SHUFFLE. A prefilter tuned too tight for a
     * small part truncates (or empties) that part's sample where the
@@ -818,6 +759,7 @@ object DriftChecks {
                      ref: RefState, runId: String, alpha: Double,
                      maxSample: Int = 1000, prefilterFrac: Double = 1.0,
                      numPermutations: Int = 100, randomState: Long = 31L): Seq[Verdict] = {
+    requirePermutations("mmdDistributed", numPermutations)
     import spark.implicits._
     import org.apache.spark.sql.functions.{col, lit, pmod, xxhash64}
     val M = 1000000L
@@ -853,21 +795,8 @@ object DriftChecks {
         }
         val y = heap.toArray.sorted(ord).map(_._2)
         val (x, sigma) = bc.value
-        val m = x.length
-        val pool = x ++ y
-        val kMat = Mmd.kernelMatrix(pool, sigma)
-        val sT = Mmd.upperTriangleSum(kMat, pool.length)
-        val obs = Mmd.statsBatchFromMatrix(kMat, pool.length, m, sT,
-          Array(Array.tabulate(pool.length)(identity)))(0)
-        var ge = 0
-        (1 to numPermutations).grouped(64).foreach { grp =>
-          val perms = grp.map { permId =>
-            graft.stats.StatMath.permutation(pool.length,
-              (randomState * 1000003L + part) * 0x9E3779B97F4A7C15L + (permId - 1))
-          }.toArray
-          Mmd.statsBatchFromMatrix(kMat, pool.length, m, sT, perms)
-            .foreach(st => if (st >= obs) ge += 1)
-        }
+        val (obs, ge) = observedAndExceedances(x ++ y, x.length, sigma,
+          part, 0, numPermutations + 1, randomState)
         (part, y.length, obs, ge)
       }
       .collect()
@@ -881,81 +810,86 @@ object DriftChecks {
     }.toSeq
   }
 
+  /** MMD + permutation test (E10) on bounded per-partition feature samples vs
+    * the fitted reference sample — frouros MMD verbatim in semantics
+    * (fit: ml/training.py:131-147; compare: detector_api/app/detector.py:58-60;
+    * 100-permutation test seeded with random_state=31: ml/training.py:136-144).
+    *
+    * Distributed shape: the samples are broadcast and each part's
+    * permutation ids 0..numPermutations (0 = the observed, identity split)
+    * are cut into chunks of `permsPerTask`; one task row per chunk evaluates
+    * the observed split plus its chunk in one [[Mmd.permutationStats]] pass
+    * and emits (part, observed, #perm-stats ≥ observed). The default chunk
+    * holds the whole default test (observed + 100), so each part costs one
+    * kernel pass; smaller chunks spread a few parts over more cores at one
+    * extra kernel pass per chunk. Permutation seeds derive from
+    * (randomState, part, permId), and the observed statistic does not depend
+    * on its chunk, so p-values are identical at any chunking and
+    * parallelism. Driver traffic is O(chunks), never O(parts × permutations).
+    * p = #{perm ≥ observed} / numPermutations — the plain proportion, as in
+    * [[Mmd.permutationTest]].
+    */
   def mmd(spark: SparkSession, runId: String, alpha: Double, ref: RefState,
           samples: Map[Int, Array[Array[Double]]],
           numPermutations: Int = 100, randomState: Long = 31L,
-          permsPerTask: Int = 64): Seq[Verdict] = {
+          permsPerTask: Int = 101): Seq[Verdict] = {
+    requirePermutations("mmd", numPermutations)
+    require(permsPerTask >= 1, s"mmd: permsPerTask must be >= 1, got $permsPerTask")
     import spark.implicits._
     val parts = samples.keys.toSeq.sorted
     val bc = spark.sparkContext.broadcast((ref.refSample, ref.sigma, samples))
     val perPart = numPermutations + 1 // permId 0 = observed (identity split)
-    // task chunks: (part, permStart, permEnd). Each task materializes the
-    // pooled kernel matrix ONCE and evaluates its chunk of permutations as
-    // pure reindexed sums — no exp() per permutation. This is the engine's
-    // answer to the reference's chunked kernel + multiprocessing permutation
-    // pool (ml/training.py:145, 528-534): the kernel work is O(pool²) per
-    // task-chunk, permutation work is adds only, and chunks fan out over all
-    // executors via spark.range-style task parallelism.
     val chunks = for {
       part <- parts
       s <- 0 until perPart by permsPerTask
     } yield (part, s, math.min(s + permsPerTask, perPart))
-    // createDataset slices the local Seq into defaultParallelism CONTIGUOUS
-    // ranges — consecutive chunks share a part, so each task rebuilds the
-    // kernel matrix at most once or twice. (A round-robin repartition here
-    // interleaves parts and forces a rebuild every other chunk.)
-    // each task emits one PARTIAL row per (part, chunk): the observed stat
-    // (if permId 0 was in the chunk) plus this chunk's count of perm-stats ≥
-    // observed — the observed statistic is recomputed from the shared kernel
-    // matrix (identity split, cheap) so chunks are self-contained. Driver
-    // traffic is O(chunks), never O(parts × permutations): the shape that
-    // holds when a snapshot has 10^5+ partitions.
-    val runToken = java.util.UUID.randomUUID().toString
     val partials = spark.createDataset(chunks)
       .mapPartitions { it =>
         val (refSample, sigma, prodSamples) = bc.value
         it.map { case (part, s, e) =>
-          val m = refSample.length
-          // the chunk-invariant observed statistic is computed once at
-          // matrix-build time and cached with the matrix — recomputing it
-          // per chunk would re-stream the whole O(n²) matrix each time
-          val (kMat, nPool, sTotal, obs) = KernelCache.get(runToken, part, () => {
-            val pool = refSample ++ prodSamples(part)
-            val k = Mmd.kernelMatrix(pool, sigma)
-            val sT = Mmd.upperTriangleSum(k, pool.length)
-            val ob = Mmd.statsBatchFromMatrix(k, pool.length, m, sT,
-              Array(Array.tabulate(pool.length)(identity)))(0)
-            (k, pool.length, sT, ob)
-          })
-          // batch-of-64 bitmask evaluation: one sequential matrix pass per 64
-          // permutations instead of one random-access pass per permutation —
-          // see Mmd.statsBatchFromMatrix
-          var ge = 0
-          (math.max(s, 1) until e).grouped(64).foreach { grp =>
-            val perms = grp.map { permId =>
-              graft.stats.StatMath.permutation(nPool,
-                // seed mixes part so each partition gets an independent stream
-                (randomState * 1000003L + part) * 0x9E3779B97F4A7C15L + (permId - 1))
-            }.toArray
-            Mmd.statsBatchFromMatrix(kMat, nPool, m, sTotal, perms)
-              .foreach(st => if (st >= obs) ge += 1)
-          }
+          val (obs, ge) = observedAndExceedances(refSample ++ prodSamples(part),
+            refSample.length, sigma, part, s, e, randomState)
           (part, obs, ge)
         }
       }
       .collect()
+    bc.destroy()
 
     val byPart = partials.groupBy(_._1)
     parts.map { part =>
       val rows = byPart(part)
       val obs = rows.head._2
       val ge = rows.map(_._3).sum
-      val p = ge.toDouble / numPermutations // plain proportion — see Mmd.permutationTest
+      val p = ge.toDouble / numPermutations
 
       Verdict.now(runId, part, "mmd_features", alpha, obs, p, None,
         Map("sigma" -> ref.sigma, "n_ref" -> ref.refSample.length.toDouble,
           "n_prod" -> samples(part).length.toDouble,
           "permutations" -> numPermutations.toDouble), ref.snapshotId)
     }
+  }
+
+  private def requirePermutations(caller: String, numPermutations: Int): Unit =
+    require(numPermutations >= 1, s"$caller: numPermutations must be >= 1, got " +
+      s"$numPermutations (the p-value is the share of permutations whose " +
+      "statistic reaches the observed one)")
+
+  /** The observed MMD of a part's pooled sample (identity split, first m
+    * rows = reference) and how many of the permutations with ids in
+    * [from, until) ∖ {0} reach it, in one [[Mmd.permutationStats]] pass.
+    * Permutation `permId` shuffles the pool with a seed mixed from
+    * (randomState, part, permId), so each part draws an independent stream
+    * and any chunking of the ids yields the same counts. */
+  private def observedAndExceedances(pool: Array[Array[Double]], m: Int,
+                                     sigma: Double, part: Int, from: Int,
+                                     until: Int, randomState: Long): (Double, Int) = {
+    val perms = Array.tabulate(pool.length)(identity) +:
+      (math.max(from, 1) until until).map { permId =>
+        StatMath.permutation(pool.length,
+          (randomState * 1000003L + part) * 0x9E3779B97F4A7C15L + (permId - 1))
+      }.toArray
+    val stats = Mmd.permutationStats(pool, m, sigma, perms)
+    val obs = stats(0)
+    (obs, stats.iterator.drop(1).count(_ >= obs))
   }
 }

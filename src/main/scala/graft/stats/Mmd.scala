@@ -9,8 +9,9 @@ package graft.stats
   * samples — exactly like the reference, which fits on a 6,000-row reference
   * window (ml/training.py:252) and compares 10,000-row batches
   * (ml/testing.py:61). At 100 TB scale the *sampling* is distributed (Spark
-  * side); this math runs on the bounded per-partition samples, and the
-  * permutation fan-out is distributed over `spark.range(numPermutations)`.
+  * side); this math runs on the bounded per-partition samples. The engine's
+  * permutation test (`DriftChecks.mmd`, `DriftChecks.mmdDistributed`) runs
+  * [[permutationStats]] once per task over a part's pooled sample.
   */
 object Mmd {
 
@@ -118,143 +119,92 @@ object Mmd {
       2.0 * syy / (n.toDouble * (n - 1)) -
       2.0 * sxy / (m.toDouble * n)
 
-  /** Full pooled kernel matrix (float, symmetric, row-major). Computing it
-    * ONCE per task and reindexing per permutation removes the exp() from the
-    * permutation loop — the permutation test then costs additions only. */
-  def kernelMatrix(pool: Array[Array[Double]], sigma: Double): Array[Float] = {
+  /** MMD distance of every permutation in `perms` over one pooled sample,
+    * in ONE pass over the kernel's strict upper triangle and without ever
+    * materializing the kernel matrix. `perms(b)` is a permuted index order
+    * of `pool`: its first m entries form X_b, the rest Y_b (the identity
+    * order gives the observed statistic).
+    *
+    * Row i's kernel entries v_j = k(pool_i, pool_j) for j > i are computed
+    * once (float-rounded, double-accumulated) and feed three sums:
+    *   - the total sT = Σ_{i<j} v_ij and the row sums R_i = Σ_{j≠i} v_ij;
+    *   - for each permutation b with i ∈ X_b, sxx_b += Σ_{j>i, j∈X_b} v_j,
+    *     read off b's X-membership bitset into a register accumulator, and
+    *     rx_b += R_i.
+    * With rx_b = Σ_{i∈X_b} R_i = 2·sxx_b + sxy_b, the other two pair sums
+    * follow without touching a Y–Y pair: sxy_b = rx_b − 2·sxx_b and
+    * syy_b = sT − sxx_b − sxy_b = sT − rx_b + sxx_b.
+    *
+    * Memory: O(n) for the row and its sums plus perms × ⌈n/64⌉ bitset words.
+    * Permutation b's result depends only on b's own split, never on which
+    * other permutations share the call. Returns all zeros when either side
+    * has fewer than two rows (the estimator is undefined there). */
+  def permutationStats(pool: Array[Array[Double]], m: Int, sigma: Double,
+                       perms: Array[Array[Int]]): Array[Double] = {
     val n = pool.length
-    val k = new Array[Float](n * n)
-    var i = 0
-    while (i < n) {
-      k(i * n + i) = 1.0f
-      var j = i + 1
-      while (j < n) {
-        val v = rbf(pool(i), pool(j), sigma).toFloat
-        k(i * n + j) = v
-        k(j * n + i) = v
-        j += 1
-      }
-      i += 1
-    }
-    k
-  }
-
-  /** Sum of the strict upper triangle of the pooled kernel matrix — a
-    * permutation invariant: for ANY split of the pool into (X, Y),
-    * sxx + syy + sxy = this total. Lets the batch evaluator skip the cross
-    * term entirely. One sequential pass. */
-  def upperTriangleSum(k: Array[Float], nPool: Int): Double = {
-    var s = 0.0
-    var i = 0
-    while (i < nPool) {
-      val row = i * nPool
-      var j = i + 1
-      while (j < nPool) { s += k(row + j); j += 1 }
-      i += 1
-    }
-    s
-  }
-
-  /** Evaluate up to 64 permutations in ONE sequential pass over the kernel
-    * matrix using membership bitmasks.
-    *
-    * Why: the naive per-permutation evaluation (`statFromMatrix`) makes one
-    * full random-access pass over the O(n²) matrix PER permutation — at 32
-    * concurrent tasks the working sets exceed L3 and the loop is DRAM-
-    * bandwidth-bound, which caps single-node scaling and would eat executor
-    * memory bandwidth on a real cluster. Here each matrix entry is loaded
-    * once per 64 permutations (sequential, prefetch-friendly) and membership
-    * tests run in registers: bit b of `mx(i)` says whether pool index i lands
-    * in X under permutation b. Cross terms come free via `upperTriangleSum`.
-    * ~64× less memory traffic per permutation → the fan-out is compute-bound
-    * and scales with cores.
-    *
-    * `perms(b)` = the permuted index order (first m entries form X_b).
-    * Returns the MMD distance per permutation, matching `statFromMatrix`. */
-  def statsBatchFromMatrix(k: Array[Float], nPool: Int, m: Int, sTotal: Double,
-                           perms: Array[Array[Int]]): Array[Double] = {
     val nb = perms.length
-    require(nb <= 64, s"batch width $nb > 64")
-    val n2 = nPool - m
-    if (m < 2 || n2 < 2) return Array.fill(nb)(0.0)
-    val mx = new Array[Long](nPool)
+    val n2 = n - m
+    if (m < 2 || n2 < 2) return new Array[Double](nb)
+    val words = (n + 63) >>> 6
+    // bit i of inX(b * words + i / 64): pool index i lands in X_b
+    val inX = new Array[Long](nb * words)
     var b = 0
     while (b < nb) {
       val p = perms(b)
-      var i = 0
-      while (i < m) { mx(p(i)) |= 1L << b; i += 1 }
+      val base = b * words
+      var t = 0
+      while (t < m) { val i = p(t); inX(base + (i >>> 6)) |= 1L << i; t += 1 }
       b += 1
     }
-    val live = if (nb == 64) -1L else (1L << nb) - 1
+    val v = new Array[Double](n)
+    val rowSum = new Array[Double](n)
     val sxx = new Array[Double](nb)
-    val syy = new Array[Double](nb)
+    val rx = new Array[Double](nb)
+    var sT = 0.0
     var i = 0
-    while (i < nPool) {
-      val row = i * nPool
-      val mi = mx(i)
-      val ni = ~mi & live
+    while (i < n) {
+      val xi = pool(i)
+      var ri = rowSum(i)
       var j = i + 1
-      while (j < nPool) {
-        val v = k(row + j).toDouble
-        var wx = mi & mx(j)
-        while (wx != 0) {
-          val t = java.lang.Long.numberOfTrailingZeros(wx)
-          sxx(t) += v
-          wx &= wx - 1
-        }
-        var wy = ni & ~mx(j) & live
-        while (wy != 0) {
-          val t = java.lang.Long.numberOfTrailingZeros(wy)
-          syy(t) += v
-          wy &= wy - 1
-        }
+      while (j < n) {
+        val kv = rbf(xi, pool(j), sigma).toFloat.toDouble
+        v(j) = kv
+        ri += kv
+        rowSum(j) += kv
+        sT += kv
         j += 1
+      }
+      // row i's sum is complete here: earlier rows already added theirs
+      val w0 = i >>> 6
+      val bit = 1L << i
+      b = 0
+      while (b < nb) {
+        val base = b * words
+        if ((inX(base + w0) & bit) != 0) {
+          var s = 0.0
+          var w = w0
+          var word = inX(base + w0) & (-2L << i) // members above i only
+          while (w < words) {
+            val off = w << 6
+            while (word != 0) {
+              s += v(off + java.lang.Long.numberOfTrailingZeros(word))
+              word &= word - 1
+            }
+            w += 1
+            if (w < words) word = inX(base + w)
+          }
+          sxx(b) += s
+          rx(b) += ri
+        }
+        b += 1
       }
       i += 1
     }
     Array.tabulate(nb) { t =>
-      val sxy = sTotal - sxx(t) - syy(t)
-      val mmd2 = 2.0 * sxx(t) / (m.toDouble * (m - 1)) +
-        2.0 * syy(t) / (n2.toDouble * (n2 - 1)) -
-        2.0 * sxy / (m.toDouble * n2)
-      math.sqrt(math.max(0.0, mmd2))
+      val sxy = rx(t) - 2.0 * sxx(t)
+      val syy = sT - rx(t) + sxx(t)
+      math.sqrt(math.max(0.0, mmd2FromSums(sxx(t), syy, sxy, m, n2)))
     }
-  }
-
-  /** MMD distance from a precomputed pooled kernel matrix and an index
-    * permutation: first m permuted indices = X, rest = Y. Double accumulators
-    * over float entries. */
-  def statFromMatrix(k: Array[Float], nPool: Int, m: Int, idx: Array[Int]): Double = {
-    val n2 = nPool - m
-    if (m < 2 || n2 < 2) return 0.0
-    var sxx = 0.0
-    var i = 0
-    while (i < m) {
-      val ri = idx(i) * nPool
-      var j = i + 1
-      while (j < m) { sxx += k(ri + idx(j)); j += 1 }
-      i += 1
-    }
-    var syy = 0.0
-    i = m
-    while (i < nPool) {
-      val ri = idx(i) * nPool
-      var j = i + 1
-      while (j < nPool) { syy += k(ri + idx(j)); j += 1 }
-      i += 1
-    }
-    var sxy = 0.0
-    i = 0
-    while (i < m) {
-      val ri = idx(i) * nPool
-      var j = m
-      while (j < nPool) { sxy += k(ri + idx(j)); j += 1 }
-      i += 1
-    }
-    val mmd2 = 2.0 * sxx / (m.toDouble * (m - 1)) +
-      2.0 * syy / (n2.toDouble * (n2 - 1)) -
-      2.0 * sxy / (m.toDouble * n2)
-    math.sqrt(math.max(0.0, mmd2))
   }
 
   /** One permutation's statistic: pool = ref ++ prod rows, shuffled with a
@@ -272,8 +222,9 @@ object Mmd {
     distance(px, py, sigma)
   }
 
-  /** Full permutation test run locally (used in unit tests and for tiny
-    * partition counts; the engine fans permutations out over spark.range).
+  /** Full permutation test run locally, one explicit split per permutation
+    * (used in unit tests; the engine evaluates its permutations with
+    * [[permutationStats]]).
     * p = #{perm >= observed} / P — the plain proportion, matching the
     * reference's semantics (frouros PermutationTestDistanceBased with 100
     * perms trips verdicts at α=0.01 in ml/testing.py:183, which requires p

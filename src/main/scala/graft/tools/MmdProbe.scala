@@ -4,8 +4,11 @@ import org.apache.spark.sql.SparkSession
 import graft.checks.{DriftChecks, RefState}
 
 /** Isolates the compute-bound MMD permutation fan-out at two parallelism
-  * levels, interleaved A/B/A/B, to separate sandbox-VM noise from systematic
-  * scaling behavior. Prints per-run seconds at each level. */
+  * levels — all available cores and one core — interleaved A/B/A/B, to
+  * separate host noise from systematic scaling behavior. Prints per-run
+  * seconds at each level.
+  *
+  * Run: sbt "runMain graft.tools.MmdProbe [numPermutations]" (default 6000). */
 object MmdProbe {
   private def session(cores: Int): SparkSession = {
     val s = SparkSession.builder()
@@ -38,12 +41,14 @@ object MmdProbe {
       dt
     }
 
+    val cores = Runtime.getRuntime.availableProcessors()
     // warm-up
-    run(32)
+    run(cores)
     for (i <- 1 to 3) {
-      val hi = run(32)
-      val lo = run(8)
-      println(f"round $i: hi(32)=$hi%.2f s  lo(8)=$lo%.2f s  ratio=${lo / hi}%.2f  eff=${lo / hi / 4}%.2f")
+      val hi = run(cores)
+      val lo = run(1)
+      println(f"round $i: hi($cores)=$hi%.2f s  lo(1)=$lo%.2f s  " +
+        f"ratio=${lo / hi}%.2f  eff=${lo / hi / cores}%.2f")
     }
   }
 }

@@ -80,6 +80,26 @@ class GoldenScenarioSpec extends AnyFunSuite {
     }
   }
 
+  test("MMD: verdicts match the recorded golden values") {
+    // (part, distance, p_value) of every mmd_features verdict of this run
+    // (maxSample 600, 50 permutations), recorded from the kernel-matrix
+    // implementation that preceded Mmd.permutationStats
+    val golden = Seq(
+      (0, 0.0, 1.0), (1, 0.008904177351036756, 0.32), (2, 0.0, 1.0),
+      (3, 0.056071590897013565, 0.0), (4, 0.1723984230145087, 0.0),
+      (5, 0.34560892594381637, 0.0), (6, 0.1130011951793075, 0.0),
+      (7, 0.17114368659781698, 0.0), (8, 0.29887074051040774, 0.0),
+      (9, 0.4597956252532498, 0.0), (10, 0.6364653739886137, 0.0),
+      (11, 0.12711749482479598, 0.0), (12, 0.23152828360742012, 0.0),
+      (13, 0.3425395307606187, 0.0), (14, 0.5871616988340578, 0.0),
+      (15, 0.0, 1.0), (16, 0.0, 1.0), (17, 0.04223845039684524, 0.02))
+    golden.foreach { case (part, d, p) =>
+      val v = verdicts((part, "mmd_features"))
+      assert(v.p_value == p, s"part $part p=${v.p_value}, recorded $p")
+      assert(math.abs(v.distance - d) <= 1e-12 * d, s"part $part d=${v.distance}, recorded $d")
+    }
+  }
+
   test("duplicate fixture: uniqueness fails only there, with violation rows") {
     assert(!verdicts((15, "unique_doc_id")).passed)
     (0 to 14).foreach(p => assert(verdicts((p, "unique_doc_id")).passed, s"part $p"))

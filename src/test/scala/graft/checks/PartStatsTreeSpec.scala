@@ -97,7 +97,7 @@ class TreeMergeRunSpec extends AnyFunSuite {
 /** The fully-distributed MMD path must produce verdicts IDENTICAL to the
   * collect-broadcast path: same bounded sample selection
   * (DocStatsBuffer.SampleOrd), same (randomState, part, permId) seeds, same
-  * batched-bitmask estimator — only the execution shape differs (samples
+  * `Mmd.permutationStats` kernel — only the execution shape differs (samples
   * never transit the driver). */
 class MmdDistributedSpec extends AnyFunSuite {
   lazy val spark = graft.SparkTestBase.spark

@@ -61,36 +61,48 @@ class PropertySpec extends AnyFunSuite {
     }
   }
 
-  test("kernel-matrix statistic agrees with direct computation (identity split)") {
-    (1 to 50).foreach { _ =>
-      val x = vecs(10, 3); val y = vecs(12, 3)
-      val direct = Mmd.distance(x, y, 1.0)
-      val pool = x ++ y
-      val k = Mmd.kernelMatrix(pool, 1.0)
-      val viaMatrix = Mmd.statFromMatrix(k, pool.length, x.length,
-        Array.tabulate(pool.length)(identity))
-      assert(math.abs(direct - viaMatrix) < 1e-4, s"$direct vs $viaMatrix")
+  test("permutationStats == MMD of each explicit split, 1 to 130 perms") {
+    val sigma = 0.9
+    // the engine's statistic: Mmd.distance over float-rounded kernel entries
+    def rbfF(a: Array[Double], b: Array[Double]): Double = Mmd.rbf(a, b, sigma).toFloat.toDouble
+    def explicit(x: Array[Array[Double]], y: Array[Array[Double]]): Double = {
+      def upper(a: Array[Array[Double]]): Double =
+        (for (i <- a.indices; j <- i + 1 until a.length) yield rbfF(a(i), a(j))).sum
+      val sxy = (for (p <- x; q <- y) yield rbfF(p, q)).sum
+      math.sqrt(math.max(0.0,
+        Mmd.mmd2FromSums(upper(x), upper(y), sxy, x.length, y.length)))
     }
-  }
-
-  test("batched bitmask permutation evaluation matches per-permutation path") {
-    (1 to 10).foreach { round =>
-      val x = vecs(20, 3); val y = vecs(25, 3)
+    def close(a: Double, b: Double, rel: Double): Boolean =
+      math.abs(a - b) <= rel * math.max(math.max(math.abs(a), math.abs(b)), 1e-9)
+    Seq(1, 63, 64, 65, 130).zipWithIndex.foreach { case (nPerms, round) =>
+      // pool of 70: the X-membership bitsets span two words too
+      val x = vecs(30, 3); val y = vecs(40, 3)
       val pool = x ++ y
       val n = pool.length
-      val k = Mmd.kernelMatrix(pool, 1.0)
-      val sTotal = Mmd.upperTriangleSum(k, n)
-      // mix of identity + seeded permutations, batch width up to 64
-      val perms = Array.tabulate(math.min(64, 3 + round * 6)) { b =>
+      val perms = Array.tabulate(nPerms) { b =>
         if (b == 0) Array.tabulate(n)(identity)
         else StatMath.permutation(n, round * 1000L + b)
       }
-      val batch = Mmd.statsBatchFromMatrix(k, n, x.length, sTotal, perms)
+      val got = Mmd.permutationStats(pool, x.length, sigma, perms)
+      assert(got.length == nPerms)
       perms.zipWithIndex.foreach { case (p, b) =>
-        val single = Mmd.statFromMatrix(k, n, x.length, p)
-        assert(math.abs(batch(b) - single) < 1e-9,
-          s"round=$round b=$b ${batch(b)} vs $single")
+        val xb = p.take(x.length).map(pool)
+        val yb = p.drop(x.length).map(pool)
+        val want = explicit(xb, yb)
+        assert(close(got(b), want, 1e-9), s"perms=$nPerms b=$b ${got(b)} vs $want")
+        // double-kernel Mmd.distance differs only by the float rounding
+        assert(math.abs(got(b) - Mmd.distance(xb, yb, sigma)) < 1e-4)
       }
+      assert(got(0) == Mmd.permutationStats(pool, x.length, sigma, perms.take(1))(0),
+        "a permutation's statistic must not depend on the rest of the batch")
+      assert(close(got(0), explicit(x, y), 1e-9))
+      assert(math.abs(got(0) - Mmd.distance(x, y, sigma)) < 1e-4)
+    }
+    // fewer than two rows on either side: the estimator is undefined -> 0
+    val pool = vecs(6, 3)
+    val perms = Array.tabulate(3)(b => StatMath.permutation(6, b.toLong))
+    Seq(0, 1, 5, 6).foreach { m =>
+      assert(Mmd.permutationStats(pool, m, 1.0, perms).sameElements(Array(0.0, 0.0, 0.0)), s"m=$m")
     }
   }
 
