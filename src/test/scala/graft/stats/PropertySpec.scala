@@ -61,6 +61,36 @@ class PropertySpec extends AnyFunSuite {
     }
   }
 
+  test("kernel-matrix statistic agrees with direct computation (identity split)") {
+    (1 to 50).foreach { _ =>
+      val x = vecs(10, 3); val y = vecs(12, 3)
+      val direct = Mmd.distance(x, y, 1.0)
+      val pool = x ++ y
+      val viaKernel = Mmd.permutationStats(pool, x.length, 1.0,
+        Array(Array.tabulate(pool.length)(identity)))(0)
+      assert(math.abs(direct - viaKernel) < 1e-4, s"$direct vs $viaKernel")
+    }
+  }
+
+  test("batched bitmask permutation evaluation matches per-permutation path") {
+    (1 to 10).foreach { round =>
+      val x = vecs(20, 3); val y = vecs(25, 3)
+      val pool = x ++ y
+      val n = pool.length
+      // mix of identity + seeded permutations, batch width up to 64
+      val perms = Array.tabulate(math.min(64, 3 + round * 6)) { b =>
+        if (b == 0) Array.tabulate(n)(identity)
+        else StatMath.permutation(n, round * 1000L + b)
+      }
+      val batch = Mmd.permutationStats(pool, x.length, 1.0, perms)
+      perms.zipWithIndex.foreach { case (p, b) =>
+        val single = Mmd.permutationStats(pool, x.length, 1.0, Array(p))(0)
+        assert(math.abs(batch(b) - single) < 1e-9,
+          s"round=$round b=$b ${batch(b)} vs $single")
+      }
+    }
+  }
+
   test("permutationStats == MMD of each explicit split, 1 to 130 perms") {
     val sigma = 0.9
     // the engine's statistic: Mmd.distance over float-rounded kernel entries
