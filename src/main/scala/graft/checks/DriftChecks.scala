@@ -746,9 +746,10 @@ object DriftChecks {
     * permutation loop) — right when parts ≫ cores, exactly the regime this
     * path exists for; at small part counts [[mmd]]'s chunk fan-out spreads
     * better. Executor memory per task: the O(maxSample) selection heap,
-    * the pooled sample, and the permutation kernel's O(m + maxSample) row
-    * state plus one (m + maxSample)-int index order and bitset per
-    * permutation (about 0.4 MB per 100 permutations at 1000+1000) —
+    * the pooled sample and its column-major copy, the permutation kernel's
+    * O(m + maxSample) row state, and per permutation one
+    * (m + maxSample)-int index order plus its m sorted X members (about
+    * 1.2 MB per 100 permutations at 1000+1000) — transient, and
     * bounded even at `prefilterFrac = 1.0`; the prefilter's job here is
     * only to thin the by-part SHUFFLE. A prefilter tuned too tight for a
     * small part truncates (or empties) that part's sample where the
@@ -817,15 +818,18 @@ object DriftChecks {
     *
     * Distributed shape: the samples are broadcast and each part's
     * permutation ids 0..numPermutations (0 = the observed, identity split)
-    * are cut into chunks of `permsPerTask`; one task row per chunk evaluates
-    * the observed split plus its chunk in one [[Mmd.permutationStats]] pass
-    * and emits (part, observed, #perm-stats ≥ observed). The default chunk
+    * are cut into chunks of `permsPerTask`; each chunk is its own Spark
+    * partition (one task), so the scheduler balances chunks across cores
+    * rather than contiguous slices of them. A chunk's task evaluates the
+    * observed split plus its chunk in one [[Mmd.permutationStats]] pass and
+    * emits (part, observed, #perm-stats ≥ observed). The default chunk
     * holds the whole default test (observed + 100), so each part costs one
-    * kernel pass; smaller chunks spread a few parts over more cores at one
-    * extra kernel pass per chunk. Permutation seeds derive from
-    * (randomState, part, permId), and the observed statistic does not depend
-    * on its chunk, so p-values are identical at any chunking and
-    * parallelism. Driver traffic is O(chunks), never O(parts × permutations).
+    * task and one kernel pass; smaller chunks spread a few parts over more
+    * cores at one extra kernel pass per chunk. Permutation seeds derive
+    * from (randomState, part, permId) ([[Mmd.permutationSeed]]), and the
+    * observed statistic does not depend on its chunk, so p-values are
+    * identical at any chunking and parallelism. Driver traffic is
+    * O(chunks), never O(parts × permutations).
     * p = #{perm ≥ observed} / numPermutations — the plain proportion, as in
     * [[Mmd.permutationTest]].
     */
@@ -835,7 +839,6 @@ object DriftChecks {
           permsPerTask: Int = 101): Seq[Verdict] = {
     requirePermutations("mmd", numPermutations)
     require(permsPerTask >= 1, s"mmd: permsPerTask must be >= 1, got $permsPerTask")
-    import spark.implicits._
     val parts = samples.keys.toSeq.sorted
     val bc = spark.sparkContext.broadcast((ref.refSample, ref.sigma, samples))
     val perPart = numPermutations + 1 // permId 0 = observed (identity split)
@@ -843,7 +846,8 @@ object DriftChecks {
       part <- parts
       s <- 0 until perPart by permsPerTask
     } yield (part, s, math.min(s + permsPerTask, perPart))
-    val partials = spark.createDataset(chunks)
+    // one partition per chunk, so the scheduler balances chunks, not slices
+    val partials = spark.sparkContext.parallelize(chunks, math.max(1, chunks.size))
       .mapPartitions { it =>
         val (refSample, sigma, prodSamples) = bc.value
         it.map { case (part, s, e) =>
@@ -877,16 +881,16 @@ object DriftChecks {
   /** The observed MMD of a part's pooled sample (identity split, first m
     * rows = reference) and how many of the permutations with ids in
     * [from, until) ∖ {0} reach it, in one [[Mmd.permutationStats]] pass.
-    * Permutation `permId` shuffles the pool with a seed mixed from
-    * (randomState, part, permId), so each part draws an independent stream
-    * and any chunking of the ids yields the same counts. */
+    * Permutation `permId` shuffles the pool with
+    * [[Mmd.permutationSeed]](randomState, part, permId), so each part draws
+    * an independent stream and any chunking of the ids yields the same
+    * counts. */
   private def observedAndExceedances(pool: Array[Array[Double]], m: Int,
                                      sigma: Double, part: Int, from: Int,
                                      until: Int, randomState: Long): (Double, Int) = {
     val perms = Array.tabulate(pool.length)(identity) +:
       (math.max(from, 1) until until).map { permId =>
-        StatMath.permutation(pool.length,
-          (randomState * 1000003L + part) * 0x9E3779B97F4A7C15L + (permId - 1))
+        StatMath.permutation(pool.length, Mmd.permutationSeed(randomState, part, permId))
       }.toArray
     val stats = Mmd.permutationStats(pool, m, sigma, perms)
     val obs = stats(0)

@@ -66,7 +66,7 @@ object DriftDemo {
     val sigma = Mmd.medianHeuristicSigma(refSample, 500)
     println(s"\nMMD (sigma=$sigma):")
     parts.filter(_ != 0).take(6).foreach { p =>
-      val (dist, pv) = Mmd.permutationTest(refSample, samples(p), sigma, 100, 31L)
+      val (dist, pv) = Mmd.permutationTest(refSample, samples(p), sigma, 100, 31L, part = p)
       println(f"part $p%-3d mmd=$dist%.4f p=$pv%.3f drift=${pv <= 0.01}")
     }
     spark.stop()

@@ -57,6 +57,20 @@ class MmdPermutationSpec extends AnyFunSuite {
     assert(byChunking.distinct.size == 1, s"chunking moved a verdict: $byChunking")
   }
 
+  test("Mmd.permutationTest(part) p == DriftChecks.mmd p_value on the same samples and seed") {
+    val vs = DriftChecks.mmd(spark, "pt", 0.01, ref, samples)
+    assert(vs.map(_.part) == Seq(0, 1, 2))
+    vs.foreach { v =>
+      val (obs, p) = Mmd.permutationTest(refSample, samples(v.part), sigma, 100, 31L,
+        part = v.part)
+      assert(p == v.p_value, s"part ${v.part}: permutationTest p=$p, engine p=${v.p_value}")
+      // the engine rounds kernel entries to float; Mmd.distance does not
+      assert(math.abs(obs - v.distance) < 1e-5, s"part ${v.part}: $obs vs ${v.distance}")
+    }
+    // the weak shift's p lies strictly inside (0, 1), so a seed mismatch shows
+    assert(vs(1).p_value > 0.0 && vs(1).p_value < 1.0, s"weak part p=${vs(1).p_value}")
+  }
+
   test("numPermutations < 1 fails loudly in mmd and mmdDistributed") {
     val docs = DocsGen.docs(spark, 360, DocsGen.goldenScenario)
     Seq(0, -1).foreach { np =>
