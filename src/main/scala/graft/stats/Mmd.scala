@@ -135,12 +135,12 @@ object Mmd {
     * follow without touching a Y–Y pair: sxy_b = rx_b − 2·sxx_b and
     * syy_b = sT − sxx_b − sxy_b = sT − rx_b + sxx_b.
     *
-    * Cost: the row kernel is d element-wise passes plus one exp pass per
-    * row, and the gathers run four permutations at a time, each into its
-    * own accumulator, so the pass is bound by add throughput rather than
-    * add latency. Every row partial is still one ascending chain added to
-    * sxx_b once, so the results are bit-identical to summing each
-    * permutation alone. Memory: O(n·d) for the transposed pool plus the
+    * Cost: the row kernel is a zero fill and d element-wise passes plus
+    * one exp pass per row, and the gathers run four permutations at a
+    * time, each into its own accumulator, so the pass is bound by add
+    * throughput rather than add latency. Every row partial is still one
+    * ascending chain added to sxx_b once, so the results are bit-identical
+    * to summing each permutation alone. Memory: O(n·d) for the transposed pool plus the
     * row and its sums, and perms × m ints for the sorted X members (0.8 MB
     * at 101 permutations of 2000 + 2000 rows). Permutation b's result
     * depends only on b's own split, never on which other permutations share
@@ -258,14 +258,13 @@ object Mmd {
     var sT = 0.0
 
     def next(i: Int): Double = {
-      if (cols.isEmpty) java.util.Arrays.fill(v, i + 1, n, 0.0)
+      java.util.Arrays.fill(v, i + 1, n, 0.0)
       var k = 0
       while (k < cols.length) {
         val c = cols(k)
         val a = c(i)
         var j = i + 1
-        if (k == 0) while (j < n) { val d = a - c(j); v(j) = d * d; j += 1 }
-        else while (j < n) { val d = a - c(j); v(j) += d * d; j += 1 }
+        while (j < n) { val d = a - c(j); v(j) += d * d; j += 1 }
         k += 1
       }
       var ri = rowSum(i) // complete: earlier rows already added theirs
