@@ -116,12 +116,6 @@ object BenchExtra {
       PartStats.computeFused(docs, 1000, graft.sketch.DocStatsAgg.ModeBoth,
         Some(mediaSet), edges = ref.offsetEdges.toSeq)
     }
-    if (phases("stats_old")) timePhase("stats(no preproject)") {
-      sys.props("graft.stats.preproject") = "0"
-      try PartStats.computeFused(docs, 1000, graft.sketch.DocStatsAgg.ModeBoth,
-        Some(mediaSet), edges = ref.offsetEdges.toSeq)
-      finally sys.props.remove("graft.stats.preproject")
-    }
     if (phases("uniq_new")) timePhase("uniq singlepass") {
       ConstraintChecks.uniquenessSinglePass(docs, "bx")
     }

@@ -646,171 +646,6 @@ object DriftChecks {
     spark.createDataFrame(spark.sparkContext.parallelize(rows.toSeq, 1), schema)
   }
 
-  /** EXACT (unsampled) MMD distance between the fitted reference sample and
-    * EVERY doc of each partition — the engine's answer to the reference's
-    * chunked exact kernel (ml/training.py:145,505-507: `chunk_size=200`
-    * bounds kernel memory while comparing the full batch) for users who want
-    * the exact statistic on a moderate batch instead of the bounded-sample
-    * estimate.
-    *
-    * Distributed shape: the full partition is featurized executor-side with
-    * the SAME per-doc featurizer as the sampled path
-    * (`DocStatsAgg.featuresOf`), collected (48 B/doc — the `maxRows` guard
-    * bounds this; ~10⁶ rows ≈ 50 MB), broadcast back, and the O(n²) kernel
-    * work fans out as BLOCK-PAIR tasks (`Mmd.kernelBlockSum`) across all
-    * partitions in one job — no (m+n)² kernel matrix materializes anywhere;
-    * each task streams one block pair in O(blockSize²) flops with O(1)
-    * extra memory. p-values still come from the sampled permutation path
-    * ([[mmd]]); an exact permutation test would cost numPermutations× this.
-    *
-    * Returns part → exact MMD distance (√max(mmd²,0), unbiased estimator —
-    * identical semantics to [[Mmd.distance]]).
-    */
-  def mmdExactDistance(spark: SparkSession, docs: org.apache.spark.sql.DataFrame,
-                       ref: RefState, maxRows: Int = 1 << 20,
-                       blockSize: Int = 2048): Map[Int, Double] = {
-    import spark.implicits._
-    val featRows = docs
-      .select($"part", org.apache.spark.sql.functions.col("spans.kind"),
-        org.apache.spark.sql.functions.col("spans.offset"))
-      .as[(Int, Seq[String], Seq[Int])]
-      .mapPartitions(_.map { case (p, k, o) =>
-        (p, graft.sketch.DocStatsAgg.featuresOf(k, o)) })
-    // enforce the driver-memory bound BEFORE materializing anything on the
-    // driver: limit(maxRows + 1) collects at most maxRows+1 rows, so an
-    // over-sized batch fails loud here instead of OOMing inside a full
-    // collect() (the guard used to run after the collect, i.e. too late)
-    val feats = featRows.limit(maxRows + 1).collect()
-    require(feats.length <= maxRows,
-      s"mmdExactDistance: batch has > maxRows=$maxRows rows — " +
-        "exact MMD is O(n²); raise maxRows deliberately or use the sampled path")
-    val byPart: Map[Int, Array[Array[Double]]] =
-      feats.groupBy(_._1).map { case (p, rs) => p -> rs.map(_._2) }
-    val x = ref.refSample
-    val m = x.length
-    val sigma = ref.sigma
-    val bc = spark.sparkContext.broadcast((x, byPart))
-    // task list: per part, YY strict-upper block pairs + XY rectangles.
-    // kind 0 = yy pair, kind 1 = xy stripe (full X × one Y block).
-    val tasks = byPart.toSeq.sortBy(_._1).flatMap { case (p, y) =>
-      val nb = (y.length + blockSize - 1) / blockSize
-      val yy = for { i <- 0 until nb; j <- i until nb } yield (p, 0, i, j)
-      val xy = (0 until nb).map(j => (p, 1, 0, j))
-      yy ++ xy
-    }
-    val partials = spark.createDataset(tasks)
-      .mapPartitions { it =>
-        val (xx, yByPart) = bc.value
-        it.map { case (p, kind, bi, bj) =>
-          val y = yByPart(p)
-          val j0 = bj * blockSize
-          val j1 = math.min(j0 + blockSize, y.length)
-          val s = if (kind == 0) {
-            val i0 = bi * blockSize
-            val i1 = math.min(i0 + blockSize, y.length)
-            Mmd.kernelBlockSum(y, i0, i1, y, j0, j1, sigma, strictUpper = true)
-          } else Mmd.kernelBlockSum(xx, 0, xx.length, y, j0, j1, sigma, strictUpper = false)
-          (p, kind, s)
-        }
-      }
-      .collect()
-    // the broadcast (up to maxRows × 48 B per executor) is dead after the
-    // fan-out job — release executor + driver copies now instead of waiting
-    // for context GC
-    bc.destroy()
-    val sxxByRef = Mmd.kernelBlockSum(x, 0, m, x, 0, m, sigma, strictUpper = true)
-    byPart.keys.toSeq.sorted.map { p =>
-      val n = byPart(p).length
-      val syy = partials.collect { case (`p`, 0, s) => s }.sum
-      val sxy = partials.collect { case (`p`, 1, s) => s }.sum
-      p -> math.sqrt(math.max(0.0, Mmd.mmd2FromSums(sxxByRef, syy, sxy, m, n)))
-    }.toMap
-  }
-
-  /** Fully-DISTRIBUTED MMD + permutation test (E10 at 10⁵-partition scale):
-    * the bounded per-part samples are selected AND consumed executor-side —
-    * no sample bytes ever transit the driver, lifting the
-    * parts × maxSample × width driver ceiling of the collect-broadcast path
-    * ([[mmd]], whose samples ride the fused stats collect).
-    *
-    * Shape: ONE shuffle groups the hash-prefiltered candidate rows by part;
-    * each part's task replays the fused scan's exact bounded selection
-    * (maxSample smallest (hash, features) — `DocStatsBuffer.SampleOrd`),
-    * evaluates the observed split and all permutations in one
-    * [[Mmd.permutationStats]] pass with the same (randomState, part, permId)
-    * seeds as [[mmd]], and emits ONE scalar row. Driver
-    * traffic is O(parts) scalars. Verdicts are IDENTICAL to the
-    * collect-broadcast path on the same input and prefilter (spec).
-    *
-    * The parallelism unit is the part (one task owns a part's whole
-    * permutation loop) — right when parts ≫ cores, exactly the regime this
-    * path exists for; at small part counts [[mmd]]'s chunk fan-out spreads
-    * better. Executor memory per task: the O(maxSample) selection heap,
-    * the pooled sample and its column-major copy, the permutation kernel's
-    * O(m + maxSample) row state, and per permutation one
-    * (m + maxSample)-int index order plus its m sorted X members (about
-    * 1.2 MB per 100 permutations at 1000+1000) — transient, and
-    * bounded even at `prefilterFrac = 1.0`; the prefilter's job here is
-    * only to thin the by-part SHUFFLE. A prefilter tuned too tight for a
-    * small part truncates (or empties) that part's sample where the
-    * default path would not — tune with ≥3× margin as the bench does;
-    * parts with zero survivors emit no row (ValidationRun fills in a loud
-    * empty-sample verdict). */
-  def mmdDistributed(spark: SparkSession, docs: org.apache.spark.sql.DataFrame,
-                     ref: RefState, runId: String, alpha: Double,
-                     maxSample: Int = 1000, prefilterFrac: Double = 1.0,
-                     numPermutations: Int = 100, randomState: Long = 31L): Seq[Verdict] = {
-    requirePermutations("mmdDistributed", numPermutations)
-    import spark.implicits._
-    import org.apache.spark.sql.functions.{col, lit, pmod, xxhash64}
-    val M = 1000000L
-    val keyed = docs.select($"part", col("spans.kind"), col("spans.offset"),
-      pmod(xxhash64($"doc_id", lit("mmd-sample")), lit(M)).as("h"))
-    val surviving =
-      if (prefilterFrac < 1.0) keyed.filter($"h" < (M * prefilterFrac).toLong) else keyed
-    val bc = spark.sparkContext.broadcast((ref.refSample, ref.sigma))
-    val partials = surviving.as[(Int, Seq[String], Seq[Int], Long)]
-      .groupByKey(_._1)
-      .mapGroups { (part, it) =>
-        // bounded selection — a max-heap of the maxSample smallest
-        // (hash, features), the SAME full-order admission as
-        // DocStatsBuffer.updateDoc: O(maxSample) task memory even at
-        // prefilterFrac = 1.0 (a sort of every surviving row would buffer
-        // the whole part), features built only for admitted rows or
-        // boundary hash ties, and the kept set is arrival-order-invariant
-        val ord = graft.sketch.DocStatsBuffer.SampleOrd
-        val heap = scala.collection.mutable.PriorityQueue.empty(ord)
-        it.foreach { case (_, k, o, h) =>
-          if (heap.size < maxSample)
-            heap.enqueue((h, graft.sketch.DocStatsAgg.featuresOf(k, o)))
-          else {
-            val hd = heap.head
-            if (h < hd._1) {
-              heap.enqueue((h, graft.sketch.DocStatsAgg.featuresOf(k, o)))
-              heap.dequeue()
-            } else if (h == hd._1) {
-              val f = graft.sketch.DocStatsAgg.featuresOf(k, o)
-              if (ord.compare((h, f), hd) < 0) { heap.enqueue((h, f)); heap.dequeue() }
-            }
-          }
-        }
-        val y = heap.toArray.sorted(ord).map(_._2)
-        val (x, sigma) = bc.value
-        val (obs, ge) = observedAndExceedances(x ++ y, x.length, sigma,
-          part, 0, numPermutations + 1, randomState)
-        (part, y.length, obs, ge)
-      }
-      .collect()
-    bc.destroy()
-    partials.sortBy(_._1).map { case (part, nProd, obs, ge) =>
-      Verdict.now(runId, part, "mmd_features", alpha, obs,
-        ge.toDouble / numPermutations, None,
-        Map("sigma" -> ref.sigma, "n_ref" -> ref.refSample.length.toDouble,
-          "n_prod" -> nProd.toDouble,
-          "permutations" -> numPermutations.toDouble), ref.snapshotId)
-    }.toSeq
-  }
-
   /** MMD + permutation test (E10) on bounded per-partition feature samples vs
     * the fitted reference sample — frouros MMD verbatim in semantics
     * (fit: ml/training.py:131-147; compare: detector_api/app/detector.py:58-60;
@@ -832,12 +667,19 @@ object DriftChecks {
     * O(chunks), never O(parts × permutations).
     * p = #{perm ≥ observed} / numPermutations — the plain proportion, as in
     * [[Mmd.permutationTest]].
+    *
+    * The samples reach the driver through the fused scan's collect, so the
+    * driver holds parts × maxSample × 6 doubles of them (and broadcasts
+    * them); past ~10³–10⁴ parts per call, validate in batches with
+    * `ValidationRun.runResumable(limitParts = N)`.
     */
   def mmd(spark: SparkSession, runId: String, alpha: Double, ref: RefState,
           samples: Map[Int, Array[Array[Double]]],
           numPermutations: Int = 100, randomState: Long = 31L,
           permsPerTask: Int = 101): Seq[Verdict] = {
-    requirePermutations("mmd", numPermutations)
+    require(numPermutations >= 1, s"mmd: numPermutations must be >= 1, got " +
+      s"$numPermutations (the p-value is the share of permutations whose " +
+      "statistic reaches the observed one)")
     require(permsPerTask >= 1, s"mmd: permsPerTask must be >= 1, got $permsPerTask")
     val parts = samples.keys.toSeq.sorted
     val bc = spark.sparkContext.broadcast((ref.refSample, ref.sigma, samples))
@@ -872,11 +714,6 @@ object DriftChecks {
           "permutations" -> numPermutations.toDouble), ref.snapshotId)
     }
   }
-
-  private def requirePermutations(caller: String, numPermutations: Int): Unit =
-    require(numPermutations >= 1, s"$caller: numPermutations must be >= 1, got " +
-      s"$numPermutations (the p-value is the share of permutations whose " +
-      "statistic reaches the observed one)")
 
   /** The observed MMD of a part's pooled sample (identity split, first m
     * rows = reference) and how many of the permutations with ids in

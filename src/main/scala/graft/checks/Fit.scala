@@ -68,11 +68,10 @@ object Fit {
     (edgesB.result(), cumB.result())
   }
 
-  /** Fit on a reference window (all rows of `refDocs`). One stats pass +
-    * one bounded sampling pass + one exact offset-histogram pass (the
+  /** Fit on a reference window (all rows of `refDocs`). One fused stats +
+    * bounded-sample pass and one exact offset-histogram pass (the
     * deterministic KS/PSI CDF grid). */
-  def fit(refDocs: DataFrame, snapshotId: Long = 0L, maxSample: Int = 2000,
-          prefilterFrac: Double = 1.0): RefState = {
+  def fit(refDocs: DataFrame, snapshotId: Long = 0L, maxSample: Int = 2000): RefState = {
     // same fused one-pass aggregate as the validation run — the reference
     // sample MUST be featurized identically to the production samples
     val (summaries, samples) = PartStats.computeFused(

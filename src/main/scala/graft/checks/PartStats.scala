@@ -36,10 +36,6 @@ case class PartSummary(
 
 object PartStats {
 
-  /** ONE-pass fused computation of per-partition summaries AND the bounded
-    * MMD feature samples, via the custom [[graft.sketch.DocStatsAgg]]: no
-    * explode, no second sampling scan, single groupBy(part) shuffle of
-    * O(tasks × parts × bufferBytes). The workhorse of the validation pass. */
   /** The fused aggregation frame shared by [[computeFused]] and
     * [[computeFusedTree]] (and dumped by graft.tools.PlanDump).
     *
@@ -60,31 +56,22 @@ object PartStats {
                    edges: Seq[Double]): DataFrame = {
     val spark = docs.sparkSession
     import spark.implicits._
-    if (sys.props.get("graft.stats.preproject")
-        .orElse(sys.env.get("GRAFT_STATS_PREPROJECT")).contains("0")) {
-      // pre-round-6 shape (extractions as agg children, interpreted per row)
-      // — retained only as the A/B twin for BenchExtra
-      docs.groupBy($"part")
-        .agg(graft.sketch.DocStatsAgg.docStats(
-          col("spans.kind"), col("spans.offset"),
-          pmod(xxhash64($"doc_id", lit("mmd-sample")), lit(1000000L)),
-          maxSample, mode,
-          mediaRefs = mediaSet.map(_ => col("spans.media_ref")),
-          mediaSet = mediaSet, edges = edges).as("st"))
-    } else {
-      val base = docs.select(Seq($"part",
-        col("spans.kind").as("__k"), col("spans.offset").as("__o"),
-        pmod(xxhash64($"doc_id", lit("mmd-sample")), lit(1000000L)).as("__h")) ++
-        mediaSet.map(_ => col("spans.media_ref").as("__m")).toSeq: _*)
-      base.groupBy($"part")
-        .agg(graft.sketch.DocStatsAgg.docStats(
-          $"__k", $"__o", $"__h",
-          maxSample, mode,
-          mediaRefs = mediaSet.map(_ => $"__m"),
-          mediaSet = mediaSet, edges = edges).as("st"))
-    }
+    val base = docs.select(Seq($"part",
+      col("spans.kind").as("__k"), col("spans.offset").as("__o"),
+      pmod(xxhash64($"doc_id", lit("mmd-sample")), lit(1000000L)).as("__h")) ++
+      mediaSet.map(_ => col("spans.media_ref").as("__m")).toSeq: _*)
+    base.groupBy($"part")
+      .agg(graft.sketch.DocStatsAgg.docStats(
+        $"__k", $"__o", $"__h",
+        maxSample, mode,
+        mediaRefs = mediaSet.map(_ => $"__m"),
+        mediaSet = mediaSet, edges = edges).as("st"))
   }
 
+  /** ONE-pass fused computation of per-partition summaries AND the bounded
+    * MMD feature samples, via the custom [[graft.sketch.DocStatsAgg]]: no
+    * explode, no second sampling scan, single groupBy(part) shuffle of
+    * O(tasks × parts × bufferBytes). The workhorse of the validation pass. */
   def computeFused(docs: DataFrame, maxSample: Int = 1000,
                    mode: Int = graft.sketch.DocStatsAgg.ModeBoth,
                    mediaSet: Option[org.apache.spark.broadcast.Broadcast[graft.sketch.LongHashSet]] = None,
@@ -254,56 +241,5 @@ object PartStats {
         r.getLong(r.fieldIndex("approx_distinct")),
         r.getLong(r.fieldIndex("null_kind_spans")), hist, merged.toByteArray)
     }.toMap
-  }
-
-  /** Deterministic bounded per-part feature sample for the MMD check —
-    * the analog of frouros holding a bounded X_ref in memory
-    * (reference ml/training.py:147: `detector.fit(X=X_ref)` with a 6,000-row
-    * window). `prefilterFrac`, when < 1, cheaply thins rows by hash BEFORE
-    * the per-part top-k (row_number) so the sort input stays tiny at scale.
-    */
-  def sampleFeatures(docs: DataFrame, featuresOf: org.apache.spark.sql.Column => org.apache.spark.sql.Column,
-                     maxPerPart: Int, prefilterFrac: Double = 1.0): Map[Int, Array[Array[Double]]] = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    val M = 1000000L
-    // filter BEFORE featurize, explicitly: the survival hash depends only on
-    // doc_id, so the heavy feature projection must run on the thinned rows
-    // only (don't rely on the optimizer reordering through higher-order fns)
-    val keyed = docs
-      .select($"part", $"spans",
-        pmod(xxhash64($"doc_id", lit("mmd-sample")), lit(M)).as("h"))
-    val surviving = if (prefilterFrac < 1.0)
-      keyed.filter($"h" < (M * prefilterFrac).toLong) else keyed
-    val thinned = surviving.select($"part", featuresOf($"spans").as("f"), $"h")
-    // The hash prefilter leaves ~(3×maxPerPart) rows per part; collect them
-    // and trim deterministically (sort by hash, tiebreak on features) on the
-    // driver — no shuffle/sort job at all. The collected set is bounded by
-    // parts × 3×maxPerPart regardless of table size. (For extreme partition
-    // counts, switch to a per-part window top-k instead of one collect.)
-    // allocation-free deterministic ordering (hash, then elementwise features)
-    // — sortBy with a stringified key re-stringifies on every comparison
-    val ord: Ordering[(Int, Long, Seq[Double])] =
-      new Ordering[(Int, Long, Seq[Double])] {
-        def compare(a: (Int, Long, Seq[Double]), b: (Int, Long, Seq[Double])): Int = {
-          val c = java.lang.Long.compare(a._2, b._2)
-          if (c != 0) return c
-          val (fa, fb) = (a._3, b._3)
-          var i = 0
-          while (i < fa.length && i < fb.length) {
-            val cc = java.lang.Double.compare(fa(i), fb(i))
-            if (cc != 0) return cc
-            i += 1
-          }
-          Integer.compare(fa.length, fb.length)
-        }
-      }
-    thinned
-      .select($"part", $"h", $"f").as[(Int, Long, Seq[Double])]
-      .collect()
-      .groupBy(_._1)
-      .map { case (p, rows) =>
-        p -> rows.sorted(ord).take(maxPerPart).map(_._3.toArray)
-      }
   }
 }

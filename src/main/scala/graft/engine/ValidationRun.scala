@@ -3,7 +3,7 @@ package graft.engine
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.checks._
-import graft.sketch.DocStatsAgg.{ModeBoth, ModeStats}
+import graft.sketch.DocStatsAgg.ModeBoth
 import graft.model.DocsGen
 
 /** Run configuration. α defaults to the reference's offline-eval value 0.01
@@ -14,12 +14,6 @@ case class RunConfig(
     numPermutations: Int = 100,
     randomState: Long = 31L,
     maxSample: Int = 2000,
-    // consumed ONLY by the distributedMmd leg (thins the by-part sample
-    // shuffle); the default path selects samples inside the fused scan's
-    // bounded buffer and needs no prefilter. Tune with >=3x margin
-    // (maxSample x 3 / docsPerPart) — too tight truncates small parts'
-    // samples vs the default path.
-    samplePrefilterFrac: Double = 1.0,
     // 0 = single-shuffle uniqueness (default): A/B at 54M docs / 32 cores
     // measured the salted two-stage 1.6-2.1x slower wall and ~1.6x the CPU
     // (BASELINE.md round-2) — map-side partial agg already bounds hot-key
@@ -45,13 +39,6 @@ case class RunConfig(
     // snapshots with 10^4+ partitions per run() call; None (default) keeps
     // the direct collect, which is faster at ordinary partition counts.
     treeMergeFanIn: Option[Int] = None,
-    // true: the MMD check runs fully distributed (DriftChecks.mmdDistributed)
-    // — per-part samples are selected and consumed executor-side, so no
-    // sample bytes transit the driver. For snapshots with 10^4+ partitions;
-    // the fused scan then skips sampling (ModeStats) but still carries the
-    // stats and referential counting, and echoInputValues has no samples to
-    // echo. Verdicts are identical to the default path (spec-asserted).
-    distributedMmd: Boolean = false,
     // referential-path AUTO-selection bound (E6): when run()'s
     // broadcastMedia is left None, the media catalog broadcasts only if its
     // plan-estimated size is at or below this; larger catalogs take the
@@ -97,7 +84,8 @@ case class RunConfig(
   *   2. uniqueness  — one doc_id key exchange feeding one map pass (zero
   *      exchanges on a doc_id-bucketed table)
   *   3. violation rows — pruned rescans of the dirty partitions only
-  * plus the permutation fan-out on broadcast samples (no table scan). A
+  * plus the permutation fan-out (`DriftChecks.mmd`) on the samples the
+  * scan's collect brought to the driver, broadcast back (no table scan). A
   * catalog too big to broadcast moves referential off the scan into its own
   * job (probe-side broadcast or shuffled anti-join).
   */
@@ -284,24 +272,14 @@ object ValidationRun {
     // parallelism-invariant; empty when the fit ran without the grid (KLL
     // fallback)
     val refEdges: Seq[Double] = ref.offsetEdges.toSeq
-    def fused(mode: Int, ms: Option[org.apache.spark.broadcast.Broadcast[graft.sketch.LongHashSet]])
-        : (Map[Int, PartSummary], Map[Int, Array[Array[Double]]]) =
+    val (summaries, samples) = timed("stats") {
       cfg.treeMergeFanIn match {
         case Some(fanIn) =>
-          PartStats.computeFusedTree(docs, cfg.maxSample, mode, ms, fanIn, edges = refEdges)
-        case None => PartStats.computeFused(docs, cfg.maxSample, mode, ms, edges = refEdges)
+          PartStats.computeFusedTree(docs, cfg.maxSample, ModeBoth, mediaSet, fanIn,
+            edges = refEdges)
+        case None => PartStats.computeFused(docs, cfg.maxSample, ModeBoth, mediaSet,
+          edges = refEdges)
       }
-
-    // distributedMmd: the MMD leg selects and consumes its samples
-    // executor-side, concurrently with a sample-free scan; samples never
-    // reach the driver (the samples map stays empty)
-    val fMmdDist = if (!cfg.distributedMmd) None else Some(Future(timed("mmd_distributed")(
-      DriftChecks.mmdDistributed(spark, docs, ref, cfg.runId, cfg.alpha,
-        cfg.maxSample, cfg.samplePrefilterFrac,
-        cfg.numPermutations, cfg.randomState))))
-    val (summaries, samples) = timed("stats") {
-      if (cfg.distributedMmd) (fused(ModeStats, mediaSet)._1, Map.empty[Int, Array[Array[Double]]])
-      else fused(ModeBoth, mediaSet)
     }
     // launch the stats-derived violation writes BEFORE the MMD fan-out so
     // the dirty-partition rescans overlap it (and the uniqueness tail). ref
@@ -310,26 +288,8 @@ object ValidationRun {
     // overwrite here would clobber it
     if (useBroadcastMedia) sinkWrite("ref", refViolOf(summaries)._1)
     sinkWrite("integrity", intViolOf(summaries))
-    val mmdVerdicts = fMmdDist match {
-      case None =>
-        timed("mmd_fanout")(DriftChecks.mmd(spark, cfg.runId, cfg.alpha, ref,
-          samples, cfg.numPermutations, cfg.randomState))
-      case Some(f) =>
-        val mv = Await.result(f, Duration.Inf)
-        // a prefilter tuned too tight can leave a small part with ZERO
-        // surviving sample rows — it then emits no row from the fan-out.
-        // Fill in a LOUD empty-sample verdict (passed, no drift evidence)
-        // so every part still gets its mmd_features row, like the default
-        // path guarantees.
-        val present = mv.map(_.part).toSet
-        mv ++ (summaries.keySet -- present).toSeq.sorted.map { p =>
-          log.warn(s"distributedMmd: part $p had no sample survivors " +
-            "(samplePrefilterFrac too tight for its size?) - emitting empty-sample verdict")
-          Verdict.now(cfg.runId, p, "mmd_features", cfg.alpha, 0.0, 1.0, Some(true),
-            Map("n_prod" -> 0.0, "empty_sample" -> 1.0,
-              "permutations" -> cfg.numPermutations.toDouble), ref.snapshotId)
-        }
-    }
+    val mmdVerdicts = timed("mmd_fanout")(DriftChecks.mmd(spark, cfg.runId, cfg.alpha,
+      ref, samples, cfg.numPermutations, cfg.randomState))
     val parts = summaries.keys.toSeq.sorted
 
     val (uniqViol, uniqStats) = Await.result(fUniq, Duration.Inf)

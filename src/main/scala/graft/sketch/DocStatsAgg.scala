@@ -131,49 +131,6 @@ object DocStatsAgg {
     case _ => -1
   }
 
-  /** Public twin of `DocStatsBuffer.features` over plain collections, for
-    * full-batch (unsampled) paths —
-    * [[graft.checks.DriftChecks.mmdExactDistance]] featurizes EVERY doc of a
-    * partition with this and relies on its arithmetic being identical to the
-    * sampled path's (asserted in GoldenScenarioSpec). The buffer's
-    * ≤8-byte-prefix kind test is definitive equality for "text"/"image", so
-    * plain string equality here matches it. */
-  def featuresOf(kinds: Seq[String], offsets: Seq[Int]): Array[Double] = {
-    val n = kinds.length
-    var text = 0.0
-    var image = 0.0
-    var i = 0
-    var prevOff = 0
-    var sumGap = 0.0
-    val nGaps = math.max(n - 1, 1)
-    val gaps = new Array[Double](math.max(n - 1, 0))
-    while (i < n) {
-      val k = kinds(i)
-      if (k != null) {
-        if (k == "text") text += 1
-        else if (k == "image") image += 1
-      }
-      val off = offsets(i)
-      if (i > 0) {
-        gaps(i - 1) = (off - prevOff).toDouble
-        sumGap += gaps(i - 1)
-      }
-      prevOff = off
-      i += 1
-    }
-    val meanGap = sumGap / nGaps
-    var absDev = 0.0
-    var nonPos = 0.0
-    i = 0
-    while (i < gaps.length) {
-      absDev += math.abs(gaps(i) - meanGap)
-      if (gaps(i) <= 0.0) nonPos += 1
-      i += 1
-    }
-    Array(n / 8.0, meanGap / 30.0, text / n, image / n,
-      (absDev / nGaps) / 15.0, nonPos / nGaps)
-  }
-
   /** Column API: spans.kind + spans.offset arrays + sampling hash →
     * binary-encoded DocStatsResult. Consuming the FIELD arrays (not the
     * whole struct array) lets parquet nested-column pruning skip the heavy
@@ -338,10 +295,10 @@ final class DocStatsBuffer(val maxSample: Int,
     // admission uses the FULL SampleOrd (hash, then features), not the hash
     // alone: with a hash-only test, two candidates TIED with the boundary
     // hash would keep whichever arrived first — order-dependent, and
-    // divergent from any sorted-take formulation of "the maxSample smallest"
-    // (the distributed MMD path replays exactly that). The fast path (h
-    // strictly below/above the boundary) never computes features for
-    // rejected rows; only a boundary hash TIE pays the feature build.
+    // divergent from any sorted-take formulation of "the maxSample smallest".
+    // The fast path (h strictly below/above the boundary) never computes
+    // features for rejected rows; only a boundary hash TIE pays the feature
+    // build.
     if (doSample) {
       if (sample.size < maxSample) sample.enqueue((h, features(kinds, offsets)))
       else {
@@ -519,8 +476,7 @@ object DocStatsBuffer {
   }
 
   /** The deterministic sample ordering — (hash asc, then elementwise feature
-    * compare). Shared with the distributed MMD path so BOTH sample
-    * selections pick identical rows. */
+    * compare), so the kept sample does not depend on row arrival order. */
   val SampleOrd: Ordering[(Long, Array[Double])] =
     new Ordering[(Long, Array[Double])] {
       def compare(a: (Long, Array[Double]), b: (Long, Array[Double])): Int = {

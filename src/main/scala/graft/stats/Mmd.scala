@@ -10,8 +10,8 @@ package graft.stats
   * window (ml/training.py:252) and compares 10,000-row batches
   * (ml/testing.py:61). At 100 TB scale the *sampling* is distributed (Spark
   * side); this math runs on the bounded per-partition samples. The engine's
-  * permutation test (`DriftChecks.mmd`, `DriftChecks.mmdDistributed`) runs
-  * [[permutationStats]] once per task over a part's pooled sample.
+  * permutation test (`DriftChecks.mmd`) runs [[permutationStats]] once per
+  * task over a part's pooled sample.
   */
 object Mmd {
 
@@ -92,25 +92,6 @@ object Mmd {
     * `DistanceResult.distance`. */
   def distance(x: Array[Array[Double]], y: Array[Array[Double]], sigma: Double): Double =
     math.sqrt(math.max(0.0, mmd2(x, y, sigma)))
-
-  /** Partial kernel sum over a block pair — the unit of work for the
-    * distributed EXACT (unsampled) MMD path (DriftChecks.mmdExactDistance):
-    * Σ k(a_i, b_j) for i ∈ [i0,i1), j ∈ [j0,j1). With `strictUpper` (same
-    * array on both sides) only pairs with i < j count, so summing all block
-    * pairs (bi ≤ bj) yields exactly the strict upper triangle. Pure math —
-    * no Spark dependency (this object stays Spark-free). */
-  def kernelBlockSum(a: Array[Array[Double]], i0: Int, i1: Int,
-                     b: Array[Array[Double]], j0: Int, j1: Int,
-                     sigma: Double, strictUpper: Boolean): Double = {
-    var s = 0.0
-    var i = i0
-    while (i < i1) {
-      var j = if (strictUpper) math.max(j0, i + 1) else j0
-      while (j < j1) { s += rbf(a(i), b(j), sigma); j += 1 }
-      i += 1
-    }
-    s
-  }
 
   /** Unbiased MMD² from precomputed pair sums (sxx/syy strict-upper within
     * X/Y, sxy over the full X×Y rectangle). */

@@ -182,25 +182,6 @@ class GoldenScenarioSpec extends AnyFunSuite {
     assert(verdicts((15, "stats")).metrics("distinct_doc_id") == 200.0)
   }
 
-  test("exact unsampled MMD: block-pair fan-out equals the in-memory statistic " +
-    "on the full batch, and the strong-shift ordering holds") {
-    val some = docs.filter($"part".isin(0, 5, 10))
-    val exact = DriftChecks.mmdExactDistance(spark, some, ref, blockSize = 128)
-    // in-memory ground truth: featurize every doc with the same twin and run
-    // the plain O(n^2) estimator
-    val all = some.select($"part", col("spans.kind"), col("spans.offset"))
-      .as[(Int, Seq[String], Seq[Int])].collect()
-      .groupBy(_._1)
-      .map { case (p, rs) => p -> rs.map(r => graft.sketch.DocStatsAgg.featuresOf(r._2, r._3)) }
-    all.foreach { case (p, y) =>
-      val truth = graft.stats.Mmd.distance(ref.refSample, y, ref.sigma)
-      assert(math.abs(exact(p) - truth) < 1e-9, s"part $p: ${exact(p)} vs $truth")
-    }
-    // control ~0; strong drift rungs exceed it
-    assert(exact(0) < 0.05, s"control exact MMD ${exact(0)}")
-    assert(exact(5) > exact(0) && exact(10) > exact(0))
-  }
-
   test("opt-in kind-consistency (E43): per-part kind_mismatch verdicts appear, " +
     "defaults emit none, counts match the standalone check") {
     // the default run above carries no kind_mismatch verdicts

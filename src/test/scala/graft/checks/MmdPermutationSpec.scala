@@ -71,15 +71,17 @@ class MmdPermutationSpec extends AnyFunSuite {
     assert(vs(1).p_value > 0.0 && vs(1).p_value < 1.0, s"weak part p=${vs(1).p_value}")
   }
 
-  test("numPermutations < 1 fails loudly in mmd and mmdDistributed") {
-    val docs = DocsGen.docs(spark, 360, DocsGen.goldenScenario)
+  test("numPermutations < 1 fails loudly in mmd and in ValidationRun.run") {
     Seq(0, -1).foreach { np =>
-      val e1 = intercept[IllegalArgumentException](
+      val e = intercept[IllegalArgumentException](
         DriftChecks.mmd(spark, "z", 0.01, ref, samples, numPermutations = np))
-      assert(e1.getMessage.contains(s"mmd: numPermutations must be >= 1, got $np"))
-      val e2 = intercept[IllegalArgumentException](
-        DriftChecks.mmdDistributed(spark, docs, ref, "z", 0.01, numPermutations = np))
-      assert(e2.getMessage.contains(s"mmdDistributed: numPermutations must be >= 1, got $np"))
+      assert(e.getMessage.contains(s"mmd: numPermutations must be >= 1, got $np"))
     }
+    val docs = DocsGen.docs(spark, 360, DocsGen.goldenScenario)
+    val fitted = Fit.fit(docs.filter(docs("part") === 0), snapshotId = 1L, maxSample = 20)
+    val e = intercept[IllegalArgumentException](graft.engine.ValidationRun.run(docs,
+      DocsGen.media(spark), fitted,
+      graft.engine.RunConfig(runId = "z", maxSample = 20, numPermutations = 0)))
+    assert(e.getMessage.contains("mmd: numPermutations must be >= 1, got 0"))
   }
 }

@@ -50,23 +50,6 @@ class PartStatsTreeSpec extends AnyFunSuite {
   }
 }
 
-class MmdExactGuardSpec extends AnyFunSuite {
-  lazy val spark = graft.SparkTestBase.spark
-  import spark.implicits._
-
-  test("mmdExactDistance fails loudly BEFORE materializing an over-sized batch") {
-    val docs = DocsGen.docs(spark, 600, DocsGen.cleanScenario(3))
-    val ref = Fit.fit(docs.filter($"part" === 0), snapshotId = 1L, maxSample = 30)
-    val ex = intercept[IllegalArgumentException] {
-      DriftChecks.mmdExactDistance(spark, docs, ref, maxRows = 100)
-    }
-    assert(ex.getMessage.contains("maxRows"))
-    // and within the bound the exact path still works
-    val ok = DriftChecks.mmdExactDistance(spark, docs, ref, maxRows = 1000)
-    assert(ok.size == 3 && ok.values.forall(d => !d.isNaN))
-  }
-}
-
 class TreeMergeRunSpec extends AnyFunSuite {
   lazy val spark = graft.SparkTestBase.spark
   import spark.implicits._
@@ -94,46 +77,45 @@ class TreeMergeRunSpec extends AnyFunSuite {
   }
 }
 
-/** The fully-distributed MMD path must produce verdicts IDENTICAL to the
-  * collect-broadcast path: same bounded sample selection
-  * (DocStatsBuffer.SampleOrd), same (randomState, part, permId) seeds, same
-  * `Mmd.permutationStats` kernel — only the execution shape differs (samples
-  * never transit the driver). */
-class MmdDistributedSpec extends AnyFunSuite {
+/** Every `mmd_features` verdict of a full run equals an independent
+  * driver-side replay: `Mmd.permutationTest` (one explicit `Mmd.distance`
+  * per permuted split, the engine's (randomState, part, permId) seeds) over
+  * the reference sample and the sample the verdict echoes. Both ways the
+  * fused digests reach the driver — one collect, or the two-level tree
+  * merge — must feed the fan-out the sample the verdict reports. */
+class MmdReplaySpec extends AnyFunSuite {
   lazy val spark = graft.SparkTestBase.spark
   import spark.implicits._
 
-  test("mmdDistributed verdicts == collect-broadcast mmd verdicts, exactly") {
+  private def assertReplay(treeMergeFanIn: Option[Int]): Unit = {
     val docs = DocsGen.docs(spark, 1800, DocsGen.goldenScenario)
+    val media = DocsGen.media(spark)
     val ref = Fit.fit(docs.filter($"part" === 0), snapshotId = 7L, maxSample = 80)
-    val samples = PartStats.computeFused(docs, maxSample = 80,
-      graft.sketch.DocStatsAgg.ModeSample)._2
-    val viaDriver = DriftChecks.mmd(spark, "a", 0.01, ref, samples)
-      .map(v => (v.part, v.distance, v.p_value, v.metrics("n_prod")))
-    val distributed = DriftChecks.mmdDistributed(spark, docs, ref, "b", 0.01,
-        maxSample = 80)
-      .map(v => (v.part, v.distance, v.p_value, v.metrics("n_prod")))
-    assert(viaDriver.nonEmpty && viaDriver == distributed,
-      s"driver=${viaDriver.take(3)} dist=${distributed.take(3)}")
+    val mmd = graft.engine.ValidationRun.run(docs, media, ref,
+      graft.engine.RunConfig(runId = "replay", maxSample = 80, echoInputValues = true,
+        treeMergeFanIn = treeMergeFanIn))
+      .verdicts.collect().filter(_.check_id == "mmd_features").sortBy(_.part)
+    assert(mmd.map(_.part).toSeq == (0 until 18))
+    mmd.foreach { v =>
+      val y = v.input_values.getOrElse(fail(s"part ${v.part}: no echo"))
+        .map(_.toArray).toArray
+      assert(y.length.toDouble == v.metrics("n_prod"))
+      val (obs, p) = graft.stats.Mmd.permutationTest(ref.refSample, y, ref.sigma,
+        100, 31L, part = v.part)
+      assert(v.p_value == p, s"part ${v.part}: engine p=${v.p_value}, replay p=$p")
+      // the engine rounds kernel entries to float; Mmd.distance does not
+      assert(math.abs(v.distance - obs) < 1e-5, s"part ${v.part}: ${v.distance} vs $obs")
+    }
+    // the replay must see both outcomes, or it would not tell seeds apart
+    assert(mmd.exists(_.is_drift) && mmd.exists(!_.is_drift))
   }
 
-  test("run(distributedMmd = true): same mmd verdicts as the default run") {
-    val docs = DocsGen.docs(spark, 900, DocsGen.goldenScenario)
-    val media = DocsGen.media(spark)
-    val ref = Fit.fit(docs.filter($"part" === 0), snapshotId = 1L, maxSample = 50)
-    // the distributed leg's stats scan also carries the broadcast media set
-    // and the span-integrity counts: those verdicts must match too
-    val checks = Set("mmd_features", "ref_media", "span_order", "null_kind")
-    def verd(cfg: graft.engine.RunConfig) =
-      graft.engine.ValidationRun.run(docs, media, ref, cfg).verdicts.collect()
-        .filter(v => checks(v.check_id))
-        .map(v => (v.check_id, v.part, v.distance, v.p_value, v.passed)).sorted.toSeq
-    val a = verd(graft.engine.RunConfig(runId = "dflt", maxSample = 50))
-    val b = verd(graft.engine.RunConfig(runId = "dist", maxSample = 50,
-      distributedMmd = true))
-    assert(checks.forall(c => a.exists(_._1 == c)))
-    assert(a.exists(v => v._1 == "ref_media" && !v._5), "dangling fixture must fail")
-    assert(a == b)
+  test("run, direct collect: mmd verdicts == Mmd.permutationTest replay") {
+    assertReplay(None)
+  }
+
+  test("run, tree merge: mmd verdicts == Mmd.permutationTest replay") {
+    assertReplay(Some(2))
   }
 }
 

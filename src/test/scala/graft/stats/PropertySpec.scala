@@ -136,23 +136,19 @@ class PropertySpec extends AnyFunSuite {
     }
   }
 
-  test("kernelBlockSum block decomposition reproduces mmd2 exactly") {
+  test("mmd2FromSums over strict-upper/rectangle `rbf` sums reproduces mmd2") {
     val rng = new StatMath.SplitMix64(99L)
     val x = Array.fill(23, 4)(rng.nextDouble())
     val y = Array.fill(57, 4)(rng.nextDouble())
     val sigma = 0.8
-    val bs = 10
-    val nb = (y.length + bs - 1) / bs
-    var syy = 0.0
-    for (i <- 0 until nb; j <- i until nb)
-      syy += Mmd.kernelBlockSum(y, i * bs, math.min((i + 1) * bs, y.length),
-        y, j * bs, math.min((j + 1) * bs, y.length), sigma, strictUpper = true)
+    def strictUpper(a: Array[Array[Double]]): Double = {
+      var s = 0.0
+      for (i <- a.indices; j <- i + 1 until a.length) s += Mmd.rbf(a(i), a(j), sigma)
+      s
+    }
     var sxy = 0.0
-    for (j <- 0 until nb)
-      sxy += Mmd.kernelBlockSum(x, 0, x.length,
-        y, j * bs, math.min((j + 1) * bs, y.length), sigma, strictUpper = false)
-    val sxx = Mmd.kernelBlockSum(x, 0, x.length, x, 0, x.length, sigma, strictUpper = true)
-    val got = Mmd.mmd2FromSums(sxx, syy, sxy, x.length, y.length)
+    for (i <- x.indices; j <- y.indices) sxy += Mmd.rbf(x(i), y(j), sigma)
+    val got = Mmd.mmd2FromSums(strictUpper(x), strictUpper(y), sxy, x.length, y.length)
     assert(math.abs(got - Mmd.mmd2(x, y, sigma)) < 1e-12)
   }
 
