@@ -646,6 +646,13 @@ object DriftChecks {
     spark.createDataFrame(spark.sparkContext.parallelize(rows.toSeq, 1), schema)
   }
 
+  /** The [[mmd]] permutation-count precondition, also checked at
+    * `ValidationRun.run` entry so a bad config fails before any job. */
+  def requirePermutations(numPermutations: Int): Unit =
+    require(numPermutations >= 1, s"mmd: numPermutations must be >= 1, got " +
+      s"$numPermutations (the p-value is the share of permutations whose " +
+      "statistic reaches the observed one)")
+
   /** MMD + permutation test (E10) on bounded per-partition feature samples vs
     * the fitted reference sample — frouros MMD verbatim in semantics
     * (fit: ml/training.py:131-147; compare: detector_api/app/detector.py:58-60;
@@ -677,9 +684,7 @@ object DriftChecks {
           samples: Map[Int, Array[Array[Double]]],
           numPermutations: Int = 100, randomState: Long = 31L,
           permsPerTask: Int = 101): Seq[Verdict] = {
-    require(numPermutations >= 1, s"mmd: numPermutations must be >= 1, got " +
-      s"$numPermutations (the p-value is the share of permutations whose " +
-      "statistic reaches the observed one)")
+    requirePermutations(numPermutations)
     require(permsPerTask >= 1, s"mmd: permsPerTask must be >= 1, got $permsPerTask")
     val parts = samples.keys.toSeq.sorted
     val bc = spark.sparkContext.broadcast((ref.refSample, ref.sigma, samples))

@@ -172,15 +172,18 @@ object PartStats {
     * FAIL-LOUD guard: the driver collect below is bounded by `maxEntries`
     * (checked with a cheap count FIRST — metadata-only on parquet), so a
     * forced broadcast of a catalog that cannot fit driver memory dies with
-    * an actionable message instead of an OOM mid-collect. */
+    * an actionable message instead of an OOM mid-collect. `knownCount`: the
+    * catalog's entry count when the caller already took it (the cap is
+    * still checked against it; only the second count job is skipped). */
   /** Entry cap for [[broadcastMediaSet]] — shared with ValidationRun's AUTO
     * path selection so auto never picks a broadcast the cap then rejects. */
   val BroadcastMaxEntries: Long = 20L * 1000 * 1000
 
-  def broadcastMediaSet(media: DataFrame, maxEntries: Long = BroadcastMaxEntries)
+  def broadcastMediaSet(media: DataFrame, maxEntries: Long = BroadcastMaxEntries,
+                        knownCount: Option[Long] = None)
       : org.apache.spark.broadcast.Broadcast[graft.sketch.LongHashSet] = {
     val cat = media.select("media_ref")
-    val n = cat.count()
+    val n = knownCount.getOrElse(cat.count())
     require(n <= maxEntries,
       s"media catalog has $n refs > broadcast cap $maxEntries: the driver-" +
         "collect broadcast set would risk an OOM. Use the shuffled anti-join " +

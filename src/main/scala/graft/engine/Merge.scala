@@ -153,15 +153,14 @@ object Merge {
         .partitionBy("part").parquet(s"$table/data")
 
       // manifest stats for the fresh parts: one narrow (key, part) column
-      // scan of the just-written dirs — O(affected + source), keeps the E31
+      // scan of just the fresh dirs — O(affected + source), keeps the E31
       // pruning sharp across merges instead of degrading to stat-less parts
       val freshIds = rewriteMap.values.toSeq ++ insertPart
       val freshStats =
         if (target.schema(keyCol).dataType != org.apache.spark.sql.types.StringType)
           Map.empty[Int, SnapshotCatalog.PartKeyStats]
         else SnapshotCatalog.keyStatsOf(
-          spark.read.parquet(s"$table/data")
-            .filter(col("part").isin(freshIds: _*))
+          SnapshotCatalog.readParts(spark, table, freshIds, Some(out.schema))
             .select(col(keyCol), col("part")), keyCol)
       val snap = SnapshotCatalog.commitReplacing(table, affected.toSet,
         freshIds, freshStats)

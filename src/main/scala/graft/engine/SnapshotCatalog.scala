@@ -3,6 +3,8 @@ package graft.engine
 import java.nio.charset.StandardCharsets
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.types.{DataType, IntegerType, StructType}
 import scala.jdk.CollectionConverters._
 
 /** Thin snapshot-manifest layer over Parquet — the honest substitute for an
@@ -16,8 +18,11 @@ import scala.jdk.CollectionConverters._
   *
   * Layout: `<table>/data/part=<p>/...parquet` plus
   * `<table>/_snapshots/v<N>.json` listing the partitions and row counts that
-  * make up snapshot N. Readers pin a snapshot id and only see partitions in
-  * that manifest. Storage API stays plain `spark.read.parquet`.
+  * make up snapshot N. Readers pin a snapshot id and address the manifest's
+  * part dirs directly (`<table>/data/part=<p>` under `basePath`), so a read
+  * never lists `<table>/data`: a gate that reads one batch part costs
+  * O(batch) at any table size, and orphaned or foreign part dirs are never
+  * touched. Storage API stays plain `spark.read.parquet`.
   *
   * Part-grain contract (manifests track PARTS, not files — SURVEY.md §7
   * records the substitution): a part id belongs to the snapshot that
@@ -188,13 +193,12 @@ object SnapshotCatalog {
     // a non-deterministic input (sampled/repartitioned upstream) could
     // otherwise record min/max that disagree with the data on disk, making
     // key-range pruning silently unsound; this also drops the extra full
-    // pass per commit.
+    // pass per commit. Only the fresh dirs are read, under `df.schema`, so
+    // no footer is read to infer one.
     val freshStats: Map[Int, PartKeyStats] = statsKey match {
       case Some(k) if fresh.nonEmpty && df.columns.contains(k) &&
           df.schema(k).dataType == org.apache.spark.sql.types.StringType =>
-        keyStatsOf(spark.read.parquet(s"$table/data")
-          .filter(org.apache.spark.sql.functions.col("part")
-            .isInCollection(fresh.toSeq))
+        keyStatsOf(readParts(spark, table, fresh.toSeq, Some(df.schema))
           .select(k, "part"), k)
       case _ => Map.empty
     }
@@ -273,22 +277,19 @@ object SnapshotCatalog {
     * which must stay candidates — reach the scan's partition filter; the
     * key predicate itself is pushed too, so parquet row-group stats prune
     * WITHIN the surviving parts. On a key-clustered table a point lookup
-    * plans against O(1) of 10^5 parts from the manifest alone, zero footer
-    * reads, zero jobs before the one pruned scan. */
+    * plans against O(1) of 10^5 parts from the manifest alone: only the
+    * surviving part dirs are listed, zero footer reads, zero jobs before
+    * the one pruned scan. */
   def readKeyRange(spark: SparkSession, table: String, snapshotId: Long,
                    keyCol: String, lo: String, hi: String): DataFrame = {
     require(lo <= hi, s"readKeyRange: lo '$lo' > hi '$hi'")
     val snap = readManifest(table, snapshotId)
     val parts = partsForKeyRange(snap, lo, hi)
-    val reader = snap.schemaJson match {
-      case Some(js) => spark.read.schema(
-        org.apache.spark.sql.types.DataType.fromJson(js)
-          .asInstanceOf[org.apache.spark.sql.types.StructType])
-      case None => spark.read
-    }
-    import org.apache.spark.sql.functions.col
+    // the part filter selects nothing the addressed dirs do not already; it
+    // names the surviving parts in the scan's PartitionFilters, so EXPLAIN
+    // shows what the manifest pruned
     applyDeletes(spark, table,
-      reader.parquet(s"$table/data")
+      readParts(spark, table, parts, schemaOf(snap))
         .filter(col("part").isin(parts: _*))
         .filter(col(keyCol) >= lo && col(keyCol) <= hi),
       snap.deleteFiles)
@@ -553,23 +554,52 @@ object SnapshotCatalog {
     Snapshot(snapshotId, parts, created, stats, schema, deletes)
   }
 
-  /** Snapshot-pinned read: only partitions listed in the manifest are
-    * visible (partition pruning pushes the IN-filter to the scan). Reads
-    * under the SNAPSHOT'S schema when the manifest carries one (E32):
-    * columns added by later evolution project as null over files written
-    * before them, and every reader of a snapshot sees the same columns
-    * regardless of which footer Spark would have sampled. */
-  def read(spark: SparkSession, table: String, snapshotId: Long): DataFrame = {
+  /** The snapshot's table schema (E32); None on pre-schema manifests. */
+  private def schemaOf(snap: Snapshot): Option[StructType] =
+    snap.schemaJson.map(DataType.fromJson(_).asInstanceOf[StructType])
+
+  /** A frame over exactly the named part dirs: `<table>/data/part=<p>` for
+    * each listed part whose dir exists, with `basePath` at `<table>/data`
+    * so `part` stays a column. `<table>/data` itself is never listed, so
+    * the cost is O(named parts) whatever else the table holds. With a
+    * schema no footer is read to infer one. With no dirs the frame is
+    * empty under the schema (`part` last, as a file read orders it) and
+    * nothing is listed. */
+  private[engine] def readParts(spark: SparkSession, table: String,
+                                parts: Seq[Int],
+                                schema: Option[StructType]): DataFrame = {
+    val dirs = parts.distinct.sorted
+      .map(p => Paths.get(table, "data", s"part=$p"))
+      .filter(Files.isDirectory(_)).map(_.toString)
+    if (dirs.isEmpty) {
+      // a file read of no paths: nullability as any file read gives it
+      val s = schema.getOrElse(new StructType().add("part", IntegerType))
+      spark.read.schema(s).parquet()
+        .select((s.fieldNames.filterNot(_ == "part") :+ "part").map(col): _*)
+    } else schema.fold(spark.read)(spark.read.schema)
+      .option("basePath", Paths.get(table, "data").toString)
+      .parquet(dirs: _*)
+  }
+
+  /** Snapshot-pinned read: only the part dirs the manifest names are
+    * addressed, and `<table>/data` is never listed (see [[readParts]]); a
+    * manifest part without a dir reads as zero rows. `parts` narrows the
+    * read to a subset of the snapshot's parts (a WAP gate reads just its
+    * batch's); a part outside the snapshot fails loudly. Reads under the
+    * SNAPSHOT'S schema when the manifest carries one (E32): columns added
+    * by later evolution project as null over files written before them,
+    * and every reader of a snapshot sees the same columns regardless of
+    * which footer Spark would have sampled. Pending MOR deletes apply. */
+  def read(spark: SparkSession, table: String, snapshotId: Long,
+           parts: Option[Seq[Int]] = None): DataFrame = {
     val snap = readManifest(table, snapshotId)
-    val reader = snap.schemaJson match {
-      case Some(js) => spark.read.schema(
-        org.apache.spark.sql.types.DataType.fromJson(js)
-          .asInstanceOf[org.apache.spark.sql.types.StructType])
-      case None => spark.read
-    }
-    val base = reader.parquet(s"$table/data")
-      .filter(org.apache.spark.sql.functions.col("part").isin(snap.parts: _*))
-    applyDeletes(spark, table, base, snap.deleteFiles)
+    val outside = parts.getOrElse(Seq.empty).filterNot(snap.parts.toSet)
+    require(outside.isEmpty,
+      s"read: parts ${outside.distinct.sorted.mkString(",")} are not in " +
+        s"snapshot $snapshotId (it has ${snap.parts.mkString(",")})")
+    applyDeletes(spark, table,
+      readParts(spark, table, parts.getOrElse(snap.parts), schemaOf(snap)),
+      snap.deleteFiles)
   }
 
   private def deletesDir(table: String): Path = Paths.get(table, "_deletes")
@@ -653,14 +683,7 @@ object SnapshotCatalog {
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
       // manifest key-stats pruning, then one slim (key, part) detection scan
-      val reader = curSnap.schemaJson match {
-        case Some(js) => spark.read.schema(
-          org.apache.spark.sql.types.DataType.fromJson(js)
-            .asInstanceOf[org.apache.spark.sql.types.StructType])
-        case None => spark.read
-      }
-      val target = reader.parquet(s"$table/data")
-        .filter(col("part").isin(curSnap.parts: _*))
+      val target = readParts(spark, table, curSnap.parts, schemaOf(curSnap))
       val candidates: Seq[Int] =
         if (curSnap.partStats.isEmpty ||
             target.schema(keyCol).dataType != org.apache.spark.sql.types.StringType)
@@ -695,10 +718,8 @@ object SnapshotCatalog {
       val freshStats =
         if (target.schema(keyCol).dataType != org.apache.spark.sql.types.StringType)
           Map.empty[Int, PartKeyStats]
-        else keyStatsOf(
-          spark.read.parquet(s"$table/data")
-            .filter(col("part").isin(freshIds: _*))
-            .select(col(keyCol), col("part")), keyCol)
+        else keyStatsOf(readParts(spark, table, freshIds, Some(target.schema))
+          .select(col(keyCol), col("part")), keyCol)
       commitReplacing(table, affected.toSet, freshIds, freshStats,
         clearDeleteFiles = true)
     } finally allKeys.unpersist(blocking = false)

@@ -143,32 +143,38 @@ object ValidationRun {
     * broadcastMediaSet entry cap instead of OOMing. */
   def run(docs: DataFrame, media: DataFrame, ref: RefState, cfg: RunConfig,
           broadcastMedia: Option[Boolean] = None): Results = {
+    // config preconditions fail before any job or sink write starts
+    DriftChecks.requirePermutations(cfg.numPermutations)
     val spark = docs.sparkSession
     import spark.implicits._
     import scala.concurrent.{Await, Future, ExecutionContext}
     import scala.concurrent.duration.Duration
     implicit val ec: ExecutionContext = ValidationRun.jobPool
 
-    val useBroadcastMedia = broadcastMedia.getOrElse {
-      val est = estimateCatalogBytes(media)
-      if (est > BigInt(cfg.mediaBroadcastMaxBytes)) {
-        log.info(s"referential path: catalog estimate $est B > " +
-          s"${cfg.mediaBroadcastMaxBytes} B - selecting the shuffled anti-join")
-        false
-      } else {
-        // the byte estimate can pass on heavily-compressed catalogs whose
-        // ENTRY count still exceeds the broadcast-set cap (tens of millions
-        // of prefix-compressed refs): check the same bound
-        // broadcastMediaSet enforces, so AUTO falls back to the anti-join
-        // instead of dying at the cap's require mid-run (a FORCED
-        // Some(true) keeps the fail-loud contract). Metadata-only count on
-        // file sources; bounded by the small byte estimate otherwise.
-        val n = media.select("media_ref").count()
-        val ok = n <= PartStats.BroadcastMaxEntries
-        if (!ok) log.info(s"referential path: catalog has $n refs > entry " +
-          s"cap ${PartStats.BroadcastMaxEntries} - selecting the shuffled anti-join")
-        ok
-      }
+    // mediaCount: the catalog's entry count when AUTO selection took it —
+    // handed to broadcastMediaSet so the catalog is counted once per run
+    val (useBroadcastMedia, mediaCount) = broadcastMedia match {
+      case Some(forced) => (forced, None)
+      case None =>
+        val est = estimateCatalogBytes(media)
+        if (est > BigInt(cfg.mediaBroadcastMaxBytes)) {
+          log.info(s"referential path: catalog estimate $est B > " +
+            s"${cfg.mediaBroadcastMaxBytes} B - selecting the shuffled anti-join")
+          (false, None)
+        } else {
+          // the byte estimate can pass on heavily-compressed catalogs whose
+          // ENTRY count still exceeds the broadcast-set cap (tens of millions
+          // of prefix-compressed refs): check the same bound
+          // broadcastMediaSet enforces, so AUTO falls back to the anti-join
+          // instead of dying at the cap's require mid-run (a FORCED
+          // Some(true) keeps the fail-loud contract). Metadata-only count on
+          // file sources; bounded by the small byte estimate otherwise.
+          val n = media.select("media_ref").count()
+          val ok = n <= PartStats.BroadcastMaxEntries
+          if (!ok) log.info(s"referential path: catalog has $n refs > entry " +
+            s"cap ${PartStats.BroadcastMaxEntries} - selecting the shuffled anti-join")
+          (ok, Some(n))
+        }
     }
 
     // Independent check jobs are launched CONCURRENTLY from driver threads —
@@ -229,7 +235,9 @@ object ValidationRun {
       sinkWrite("ref", r._1)
       r
     }))
-    val mediaSet = if (useBroadcastMedia) Some(PartStats.broadcastMediaSet(media)) else None
+    val mediaSet =
+      if (useBroadcastMedia) Some(PartStats.broadcastMediaSet(media, knownCount = mediaCount))
+      else None
 
     // opt-in E43: one broadcast join, O(parts) counts back, row evidence to
     // the sink like every other constraint check
@@ -240,30 +248,6 @@ object ValidationRun {
         sinkWrite("kind", ConstraintChecks.kindConsistencyRows(docs, media, cfg.runId))
         counts
       }))
-
-    // violation-row builders for the stats-derived checks (lazy datasets;
-    // pruned to dirty partitions — no-ops on a clean table)
-    def refViolOf(summaries: Map[Int, PartSummary]): (Dataset[Violation], Map[Int, Long]) = {
-      val counts = summaries.collect {
-        case (p, s) if s.danglingRefSpans > 0 => p -> s.danglingRefSpans
-      }.toMap
-      val viol: Dataset[Violation] =
-        if (counts.isEmpty) spark.emptyDataset[Violation]
-        else ConstraintChecks.referentialRows(
-          docs.filter($"part".isin(counts.keys.toSeq: _*)), media, cfg.runId,
-          // refViolOf only runs when the broadcast set exists — rows then
-          // share the COUNTING scan's membership predicate (one codegen'd
-          // probe stage, no per-job join build)
-          mediaSet)
-      (viol, counts)
-    }
-    def intViolOf(summaries: Map[Int, PartSummary]): Dataset[Violation] = {
-      val dirty = summaries.collect {
-        case (p, s) if s.ordViolationDocs > 0 || s.nullKindDocs > 0 => p
-      }.toSeq
-      if (dirty.isEmpty) spark.emptyDataset[Violation]
-      else ConstraintChecks.spanIntegrityRows(docs.filter($"part".isin(dirty: _*)), cfg.runId)
-    }
 
     // 1. ONE DocStatsAgg scan computes stats AND the MMD samples (ModeBoth,
     // no explode); the MMD fan-out (pure compute on broadcast samples)
@@ -281,32 +265,49 @@ object ValidationRun {
           edges = refEdges)
       }
     }
+    // violation rows of the stats-derived checks: lazy datasets over the
+    // dirty partitions only (pruned rescans — no-ops on a clean table).
+    // Referential rows come from the scan's counts ONLY when referential
+    // rode it (the broadcast set exists — rows then share the COUNTING
+    // scan's membership predicate: one codegen'd probe stage, no per-job
+    // join build); otherwise the standalone fRef future owns them.
+    val fusedRef: Option[(Dataset[Violation], Map[Int, Long])] = mediaSet.map { set =>
+      val counts = summaries.collect {
+        case (p, s) if s.danglingRefSpans > 0 => p -> s.danglingRefSpans
+      }
+      val viol =
+        if (counts.isEmpty) spark.emptyDataset[Violation]
+        else ConstraintChecks.referentialRows(
+          docs.filter($"part".isin(counts.keys.toSeq: _*)), media, cfg.runId, Some(set))
+      (viol, counts)
+    }
+    // span-integrity counts come FREE from the stats pass; violation ROWS are
+    // materialized from the dirty partitions only — partition pruning makes
+    // this near-zero when the table is clean (the common case at scale)
+    val intViol: Dataset[Violation] = {
+      val dirty = summaries.collect {
+        case (p, s) if s.ordViolationDocs > 0 || s.nullKindDocs > 0 => p
+      }.toSeq
+      if (dirty.isEmpty) spark.emptyDataset[Violation]
+      else ConstraintChecks.spanIntegrityRows(docs.filter($"part".isin(dirty: _*)), cfg.runId)
+    }
     // launch the stats-derived violation writes BEFORE the MMD fan-out so
-    // the dirty-partition rescans overlap it (and the uniqueness tail). ref
-    // rows come from the scan's counts ONLY when referential rode it —
-    // otherwise the standalone fRef future owns src=ref and an empty
-    // overwrite here would clobber it
-    if (useBroadcastMedia) sinkWrite("ref", refViolOf(summaries)._1)
-    sinkWrite("integrity", intViolOf(summaries))
+    // the dirty-partition rescans overlap it (and the uniqueness tail).
+    // src=ref is written here only on the fused path: an overwrite would
+    // clobber the standalone path's rows
+    fusedRef.foreach(r => sinkWrite("ref", r._1))
+    sinkWrite("integrity", intViol)
     val mmdVerdicts = timed("mmd_fanout")(DriftChecks.mmd(spark, cfg.runId, cfg.alpha,
       ref, samples, cfg.numPermutations, cfg.randomState))
     val parts = summaries.keys.toSeq.sorted
 
     val (uniqViol, uniqStats) = Await.result(fUniq, Duration.Inf)
-    val (refViol, refCounts) = fRef match {
-      case Some(f) => Await.result(f, Duration.Inf)
-      case None =>
-        // counts came from the fused scan; violation rows build LAZILY from
-        // the dirty partitions only (pruned rescan — no-op on a clean table)
-        refViolOf(summaries)
-    }
+    // exactly one of the two referential paths ran
+    val (refViol, refCounts) =
+      fRef.map(Await.result(_, Duration.Inf)).getOrElse(fusedRef.get)
     val uniqCounts = uniqStats.map { case (p, s) => p -> s.dupKeys }
-    // span-integrity counts come FREE from the stats pass; violation ROWS are
-    // materialized from the dirty partitions only — partition pruning makes
-    // this near-zero when the table is clean (the common case at scale)
     val ordCounts = summaries.collect { case (p, s) if s.ordViolationDocs > 0 => p -> s.ordViolationDocs }
     val nkCounts = summaries.collect { case (p, s) if s.nullKindDocs > 0 => p -> s.nullKindDocs }
-    val intViol: Dataset[Violation] = intViolOf(summaries)
 
     def constraintVerdicts(checkId: String, counts: Map[Int, Long]): Seq[Verdict] =
       parts.map { p =>
@@ -445,8 +446,7 @@ object ValidationRun {
 
     // 1. full per-partition pass over the NEW partitions only
     val crossCounts: Map[Int, Long] = if (newParts.nonEmpty) {
-      val newDocs = SnapshotCatalog.read(spark, table, toSnapshot)
-        .filter($"part".isin(newParts: _*))
+      val newDocs = SnapshotCatalog.read(spark, table, toSnapshot, Some(newParts))
       val baseDocs = SnapshotCatalog.read(spark, table, fromSnapshot)
       val res = run(newDocs, media, ref, cfg.copy(violationsSink = None))
       // 2. cross-snapshot uniqueness: appended ids vs the base corpus

@@ -1,7 +1,6 @@
 package graft.engine
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions.col
 
 import graft.checks.{RefState, Verdict}
 
@@ -24,7 +23,8 @@ import graft.checks.{RefState, Verdict}
   * check_ids.
   *
   * Scale shape: one commit (O(batch) write), one validation pass over the
-  * NEW partitions only (never O(table)), one O(parts × checks) verdict
+  * NEW partitions only, read from their own part dirs (never O(table),
+  * and the table's data dir is never listed), one O(parts × checks) verdict
   * collect for the gate, and a rollback that is a manifest write — no
   * data moves on rejection.
   */
@@ -62,8 +62,7 @@ object Wap {
       .getOrElse(Set.empty[Int])
     val snap = SnapshotCatalog.commit(table, batch)
     val newParts = (snap.parts.toSet -- priorParts).toSeq.sorted
-    val newDocs = SnapshotCatalog.read(spark, table, snap.snapshotId)
-      .filter(col("part").isin(newParts: _*))
+    val newDocs = SnapshotCatalog.read(spark, table, snap.snapshotId, Some(newParts))
     val res = ValidationRun.run(newDocs, media,
       ref.copy(snapshotId = snap.snapshotId), cfg)
     // O(parts × checks) rows — the verdict frame is bounded by design

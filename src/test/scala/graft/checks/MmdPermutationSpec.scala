@@ -79,9 +79,15 @@ class MmdPermutationSpec extends AnyFunSuite {
     }
     val docs = DocsGen.docs(spark, 360, DocsGen.goldenScenario)
     val fitted = Fit.fit(docs.filter(docs("part") === 0), snapshotId = 1L, maxSample = 20)
-    val e = intercept[IllegalArgumentException](graft.engine.ValidationRun.run(docs,
-      DocsGen.media(spark), fitted,
-      graft.engine.RunConfig(runId = "z", maxSample = 20, numPermutations = 0)))
+    val media = DocsGen.media(spark)
+    // the run fails at entry: no scan, no sink write
+    val sink = java.nio.file.Files.createTempDirectory("perm0").resolve("sink")
+    val (e, jobs) = graft.SparkTestBase.jobsDuring(
+      intercept[IllegalArgumentException](graft.engine.ValidationRun.run(docs, media, fitted,
+        graft.engine.RunConfig(runId = "z", maxSample = 20, numPermutations = 0,
+          violationsSink = Some(sink.toString)))))
     assert(e.getMessage.contains("mmd: numPermutations must be >= 1, got 0"))
+    assert(jobs == 0, s"$jobs Spark jobs ran before the config check")
+    assert(!java.nio.file.Files.exists(sink), s"sink dir $sink was created")
   }
 }

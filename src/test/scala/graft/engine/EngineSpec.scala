@@ -158,6 +158,26 @@ class EngineSpec extends AnyFunSuite {
       graft.checks.PartStats.broadcastMediaSet(media, maxEntries = 2)
     }
     assert(ex.getMessage.contains("broadcast cap"))
+    // ...also when the caller hands over the count it already took
+    val exKnown = intercept[IllegalArgumentException] {
+      graft.checks.PartStats.broadcastMediaSet(media, maxEntries = 2, knownCount = Some(3L))
+    }
+    assert(exKnown.getMessage.contains("media catalog has 3 refs > broadcast cap 2"))
+    docs.unpersist()
+  }
+
+  test("AUTO referential selection counts the media catalog once per run") {
+    val docs = DocsGen.docs(spark, 1200, DocsGen.goldenScenario.take(4)).cache()
+    val media = DocsGen.media(spark)
+    val ref = Fit.fit(docs.filter($"part" === 0), snapshotId = 3L, maxSample = 200)
+    val cfg = RunConfig(runId = "count1", maxSample = 200, numPermutations = 10)
+    // a forced broadcast skips the selection count, so it counts the
+    // catalog exactly once; AUTO must run no more jobs than that
+    val (_, autoJobs) = graft.SparkTestBase.jobsDuring(
+      ValidationRun.run(docs, media, ref, cfg).verdicts.count())
+    val (_, forcedJobs) = graft.SparkTestBase.jobsDuring(
+      ValidationRun.run(docs, media, ref, cfg, broadcastMedia = Some(true)).verdicts.count())
+    assert(autoJobs == forcedJobs, s"auto run: $autoJobs jobs, forced broadcast: $forcedJobs")
     docs.unpersist()
   }
 
