@@ -49,15 +49,13 @@ object ConstraintChecks {
     // aggregation ([[uniquenessSinglePass]]); salts > 0 keeps the salted
     // two-stage stacked-groupBy formulation selectable (the E13 skew
     // operator; right for aggregates that don't combine map-side).
-    // GRAFT_UNIQ_LEGACY=1 forces the stacked formulation for A/B probes.
-    if (salts <= 0 && !sys.env.get("GRAFT_UNIQ_LEGACY").contains("1"))
-      uniquenessSinglePass(docs, runId, keyCols)
+    if (salts <= 0) uniquenessSinglePass(docs, runId, keyCols)
     else uniquenessStacked(docs, runId, salts, keyCols)
   }
 
   /** The pre-round-6 stacked-groupBy formulation (partial+final hash
     * aggregation at key grain, then a part-grain rollup exchange); still the
-    * engine's shape for `salts > 0` (E13) and retained as the A/B twin —
+    * engine's shape for `salts > 0` (E13) and the equality reference —
     * outputs are identical to [[uniquenessSinglePass]] (spec-asserted). */
   private[graft] def uniquenessStacked(docs: DataFrame, runId: String, salts: Int = 0,
                  keyCols: Seq[String] = Seq("doc_id")): (Dataset[Violation], Map[Int, UniquenessStats]) = {
@@ -255,15 +253,12 @@ object ConstraintChecks {
     *    task — small enough to stay cache-resident, the dominant cost of a
     *    random-probe count; and a hard bound on per-task memory at any
     *    input size — never a constant tuned to one box);
-    *  - the session shuffle width (the floor the rest of the pass uses).
-    * GRAFT_UNIQ_PARTS overrides for A/B probes. */
+    *  - the session shuffle width (the floor the rest of the pass uses). */
   private[graft] def uniqShufflePartitions(keyed: DataFrame): Int = {
-    sys.env.get("GRAFT_UNIQ_PARTS").map(_.toInt).getOrElse {
-      val conf = keyed.sparkSession.sessionState.conf.numShufflePartitions
-      val est = keyed.queryExecution.optimizedPlan.stats.sizeInBytes
-      val byBytes = (est / (16L << 20)).toLong + 1
-      math.max(conf, math.min(byBytes, 1L << 17).toInt)
-    }
+    val conf = keyed.sparkSession.sessionState.conf.numShufflePartitions
+    val est = keyed.queryExecution.optimizedPlan.stats.sizeInBytes
+    val byBytes = (est / (16L << 20)).toLong + 1
+    math.max(conf, math.min(byBytes, 1L << 17).toInt)
   }
 
   /** ZERO-EXCHANGE uniqueness for doc_id-bucketed snapshots (P20 wired into

@@ -239,13 +239,15 @@ object ValidationRun {
       if (useBroadcastMedia) Some(PartStats.broadcastMediaSet(media, knownCount = mediaCount))
       else None
 
-    // opt-in E43: one broadcast join, O(parts) counts back, row evidence to
+    // opt-in E43: one join against the catalog (broadcast under the same
+    // bound as the referential path), O(parts) counts back, row evidence to
     // the sink like every other constraint check
     val fKind = if (!cfg.kindConsistency) None else Some(Future(
       timed("kind_consistency") {
-        val counts = ConstraintChecks.kindConsistency(docs, media)
+        val counts = ConstraintChecks.kindConsistency(docs, media, useBroadcastMedia)
           .collect().map(r => r.getInt(0) -> r.getLong(2)).toMap
-        sinkWrite("kind", ConstraintChecks.kindConsistencyRows(docs, media, cfg.runId))
+        sinkWrite("kind", ConstraintChecks.kindConsistencyRows(docs, media, cfg.runId,
+          useBroadcastMedia))
         counts
       }))
 
@@ -369,7 +371,7 @@ object ValidationRun {
         .getOrElse(spark.emptyDataset[Violation])
         .union(uniqViol).union(refViol).union(intViol)
         .union(if (cfg.kindConsistency)
-          ConstraintChecks.kindConsistencyRows(docs, media, cfg.runId)
+          ConstraintChecks.kindConsistencyRows(docs, media, cfg.runId, useBroadcastMedia)
         else spark.emptyDataset[Violation])
     Results(spark.createDataset(verdicts), violations, summaries)
   }

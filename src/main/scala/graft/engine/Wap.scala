@@ -31,7 +31,9 @@ import graft.checks.{RefState, Verdict}
 object Wap {
 
   /** The structural-integrity gate: reject on constraint failures, let
-    * drift verdicts advise. */
+    * drift verdicts advise. `kind_mismatch` gates only when
+    * `cfg.kindConsistency` is on; otherwise the run emits no such verdict
+    * and the gate covers nothing there. */
   val DefaultGate: Set[String] =
     Set("unique_doc_id", "ref_media", "span_order", "null_kind",
       "schema_contract", "kind_mismatch")

@@ -99,9 +99,10 @@ case class BandHashes(child: Expression, bands: Int, rows: Int) extends UnaryExp
 /** Adjacent-token bigram pairs of a string: (w1, w2) structs, w1 NULL for
   * the head token — every token appears exactly once as a w2. Native twin
   * of `LangModel.bigramsOf(TextOps.tokens(text))`, whose HOF form has a
-  * performance landmine the 10M-doc LmProbe caught: `transform`'s lambda is
-  * interpreted and its `tokens(text)` subtree is NOT common-subexpression
-  * eliminated, so the tokenizer re-ran per ELEMENT — O(len²) per doc. Here
+  * performance landmine the 10M-doc LM probe caught (BASELINE.md §Round-4
+  * LM perplexity-filter probe): `transform`'s lambda is interpreted and its
+  * `tokens(text)` subtree is NOT common-subexpression eliminated, so the
+  * tokenizer re-ran per ELEMENT — O(len²) per doc. Here
   * the text tokenizes once and the struct array builds in one pass. */
 case class BigramPairs(child: Expression) extends UnaryExpression {
   override def dataType: DataType = ArrayType(

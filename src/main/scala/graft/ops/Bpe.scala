@@ -81,7 +81,8 @@ object Bpe {
     * rare on natural text (BpeSpec pins batched ≡ sequential on the
     * driver corpus) and the standard trade for not paying one driver
     * round-trip per merge at 32k-merge vocabularies (see
-    * graft.tools.BpeProbe for the measured round-cost curve). */
+    * BASELINE.md §Round-5 BPE training probes for the measured
+    * round-cost curve). */
   def train(df: DataFrame, textCol: String, numMerges: Int,
             minFreq: Long = 1, batchK: Int = 1,
             truncateEvery: Int = 8): DataFrame = {
@@ -101,7 +102,7 @@ object Bpe {
     // walks the whole chain, where CollapseProject + the multi-reference
     // pair expression duplicate subtrees EXPONENTIALLY (measured:
     // ~0.2 s/round through round 8, 46 s by round 18, heap OOM by ~30 —
-    // graft.tools.BpeLineageProbe). A parquet round-trip of the
+    // BASELINE.md §Round-5 BPE training probes). A parquet round-trip of the
     // vocabulary-sized table resets the plan to a scan; durable, so no
     // localCheckpoint executor-loss caveat. Scratch dirs alternate a/b
     // under a pid-scoped path and are deleted on completion.

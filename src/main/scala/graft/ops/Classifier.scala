@@ -36,14 +36,15 @@ object Classifier {
   /** Score expression over a text column. `weights.length` is the hash
     * dimension.
     *
-    * Formulation note (ClassifierProbe, 2M docs, interleaved min-of-3):
-    * `toks` is referenced three times (transform arg + size twice), so the
-    * interpreted tokenizer runs 3× per row — but the single-reference
-    * struct-accumulator fold measures at PARITY (0.36 vs 0.38 M docs/s):
-    * what it saves in tokenizations it spends allocating an interpreted
-    * `CreateNamedStruct` row per TOKEN. The BigramPairs/LmProbe lesson
-    * (9.4× there) only bites when the re-evaluated subtree sits inside a
-    * per-element lambda — O(len²); a constant number of extra O(len)
+    * Formulation note (BASELINE.md §Round-4 classifier formulation probe,
+    * 2M docs, interleaved min-of-3): `toks` is referenced three times
+    * (transform arg + size twice), so the interpreted tokenizer runs 3× per
+    * row — but the single-reference struct-accumulator fold measures at
+    * PARITY (0.36 vs 0.38 M docs/s): what it saves in tokenizations it
+    * spends allocating an interpreted `CreateNamedStruct` row per TOKEN.
+    * The BigramPairs lesson (BASELINE.md §Round-4 LM perplexity-filter
+    * probe, 9.4× there) only bites when the re-evaluated subtree sits inside
+    * a per-element lambda — O(len²); a constant number of extra O(len)
     * argument passes is noise. Single-shot A/B runs of the probe flipped
     * 2× in BOTH directions before the interleaved protocol settled it —
     * the bench's min-of-interleaved discipline applies to micro-probes
@@ -63,7 +64,7 @@ object Classifier {
 
   /** The single-reference struct-accumulator fold — bit-identical to
     * [[scoreCol]] and MEASURED SLOWER (see the formulation note); retained
-    * for the spec twin and ClassifierProbe's reproducible comparison. */
+    * as the spec twin of the measured comparison. */
   private[graft] def scoreColStructFold(text: Column, weights: Array[Double],
                                         bias: Double = 0.0): Column = {
     val dim = weights.length

@@ -105,12 +105,12 @@ object Curate {
     * FOUR downstream operators (both sides of the banded posting self-join,
     * the pair-verification join, the anti-join, and the gated projection),
     * and Spark re-executes the subplan for each reference — the 10.5M-doc
-    * CurateProbe measured the composed wall at ~4× the sum of its stages for
-    * exactly this reason (BASELINE.md round-4). Paying one write and reading
-    * it many times is the production shape for a 100 TB corpus: the
-    * materialized stage is also the natural checkpoint boundary (a failed
-    * near-dup stage restarts from parquet, not from raw input), and the
-    * lineage cut keeps the downstream DAG shallow.
+    * curation probe measured the composed wall at ~4× the sum of its stages
+    * for exactly this reason (BASELINE.md §Round-4 curation volume probe).
+    * Paying one write and reading it many times is the production shape for
+    * a 100 TB corpus: the materialized stage is also the natural checkpoint
+    * boundary (a failed near-dup stage restarts from parquet, not from raw
+    * input), and the lineage cut keeps the downstream DAG shallow.
     *
     * `.persist()` would also collapse the re-execution but holds the stage in
     * executor storage memory (evictable under pressure, lost on executor
@@ -168,8 +168,9 @@ object Curate {
     * `scratchDir` before the decon anti-join. The one-plan variant
     * references that stage TWICE (the anti-join's left leg and the
     * contamination report inside it) on top of the near-dup stage's own
-    * multi-reference — the re-execution class CurateProbe measured at ~4×
-    * and [[curateWithNearDupStaged]] exists to avoid. Use this at volume;
+    * multi-reference — the re-execution class measured at ~4× (BASELINE.md
+    * §Round-4 curation volume probe) and [[curateWithNearDupStaged]] exists
+    * to avoid. Use this at volume;
     * results are bit-identical (spec-asserted). */
   def curateFullStaged(docs: DataFrame, bench: DataFrame, scratchDir: String,
                        benchTextCol: String = "text",

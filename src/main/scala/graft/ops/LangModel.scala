@@ -55,8 +55,9 @@ object LangModel {
     * TWIN of the native [[graft.functions.BigramPairs]] — NativeExprSpec
     * asserts bit-identity. Not used on the hot path: `transform`'s lambda
     * is interpreted and re-evaluates the `t` subtree per element (the
-    * 10M-doc LmProbe measured the tokenizer running O(len²) per doc —
-    * train 622 s before, see BASELINE.md). */
+    * 10M-doc probe measured the tokenizer running O(len²) per doc —
+    * train 622 s before, see BASELINE.md §Round-4 LM perplexity-filter
+    * probe). */
   private[graft] def bigramsOf(t: Column): Column = {
     val empty = array().cast("array<struct<w1:string,w2:string>>")
     val head = when(size(t) >= 1,

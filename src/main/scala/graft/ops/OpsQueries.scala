@@ -1197,7 +1197,7 @@ object OpsQueries {
 
   /** Integer bucket edges over the milli-unit band-luma longs: the cohort
     * design places every (b0, cut) cluster ± wobble spread ≥ ~2.5 luma
-    * units from a boundary; measured by graft.tools.VideoProbe — the
+    * units from a boundary; measured by the video probe (SURVEY.md, P49) — the
     * 'same' scenario reads PSI 0.0 on every band at these edges, the
     * gain-1.2 shift 0.49–1.44. Generation is deterministic, so the
     * margins hold forever. */

@@ -270,7 +270,8 @@ object Sample {
     * `WindowGroupLimit` keeps ≤cap rows per group per map task before the
     * exchange — probe-verified), and on one box it WINS wall clock. The
     * real difference is what crosses the wire, measured by
-    * tools/SampleProbe at 10M rows with an incompressible 1 KB payload:
+    * the quota-sampler probe at 10M rows with an incompressible 1 KB payload
+    * (BASELINE.md §Round-4 quota-sampler probe):
     * the window ships ≤cap FULL rows per group per map task — 383 MB at
     * 32 tasks × 5 groups × cap 1000, a volume that grows with CLUSTER
     * WIDTH (tasks × groups × cap × rowWidth: ~12 GB at 1000 executors) —

@@ -634,7 +634,7 @@ object StreamingOps {
     * while the WIDE shingle store is only read for verify candidates,
     * pruned to their sp = xxhash64(id) mod indexParts partitions — in the
     * normal regime (band collisions rare) a small fraction of the store.
-    * Measured: tools/StreamNddProbe. */
+    * Measured: BASELINE.md §Round-4 streaming near-dup volume probe. */
   private[ops] def nearDupDroppedIds(spark: SparkSession,
       batchSh: DataFrame,      // (id, sh) — empty-shingle rows pre-filtered
       batchPosting: DataFrame, // (id, band, bh, pb)

@@ -97,8 +97,8 @@ object Temporal {
     * (end < start) match nothing. NULL keys/timestamps never match (inner
     * join). Non-key column names must be disjoint across the sides.
     *
-    * WHEN TO USE (IntervalProbe, BASELINE.md): Spark streams a naive
-    * key-equi-join's candidates through a codegen filter without
+    * WHEN TO USE (BASELINE.md §Round-4 interval-join probe): Spark streams
+    * a naive key-equi-join's candidates through a codegen filter without
     * materializing them, so at LOW interval-per-key multiplicity the naive
     * join-then-filter is actually faster (pure CPU, ~10⁹ comparisons/s at
     * 32 cores, linear in the ratio); the bucketized wall is FLAT. The

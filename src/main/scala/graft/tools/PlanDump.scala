@@ -7,16 +7,12 @@ import graft.checks.ConstraintChecks
 import graft.model.DocsGen
 
 /** Writes `.explain("formatted")` for the round-6-touched query paths to
-  * plans/r06/<name>_<suffix>.txt. The "before" plans come from the SAME
-  * binary via the runtime legacy switches (GRAFT_UNIQ_LEGACY et al.), so
-  * before/after pairs are generated by two invocations:
-  *
-  *   GRAFT_UNIQ_LEGACY=1 sbt "runMain graft.tools.PlanDump before"
-  *   sbt "runMain graft.tools.PlanDump after"
+  * plans/r06/<name>_after.txt: `sbt "runMain graft.tools.PlanDump"`. The
+  * committed `*_before.txt` dumps were written at the first commit of
+  * round 6 and are never regenerated.
   */
 object PlanDump {
   def main(args: Array[String]): Unit = {
-    val suffix = if (args.nonEmpty) args(0) else "after"
     val outDir = Paths.get("plans/r06")
     Files.createDirectories(outDir)
     val spark = SparkSession.builder().master("local[4]")
@@ -35,8 +31,8 @@ object PlanDump {
     def dump(name: String, df: DataFrame): Unit = {
       val txt = df.queryExecution.explainString(
         org.apache.spark.sql.execution.FormattedMode)
-      Files.writeString(outDir.resolve(s"${name}_$suffix.txt"), txt)
-      println(s"[plandump] wrote ${name}_$suffix.txt (${txt.length} chars)")
+      Files.writeString(outDir.resolve(s"${name}_after.txt"), txt)
+      println(s"[plandump] wrote ${name}_after.txt (${txt.length} chars)")
     }
 
     // the uniqueness violations dataset: its plan embeds the whole recovery
@@ -49,18 +45,9 @@ object PlanDump {
     val keyed = docs.select($"part",
       xxhash64(coalesce($"doc_id".cast("string"), lit("\u0000NULL")), lit("u1")).as("h1"),
       xxhash64(coalesce($"doc_id".cast("string"), lit("\u0000NULL")), lit("u2")).as("h2"))
-    if (suffix == "before") {
-      val perKey = keyed.groupBy($"h1", $"h2")
-        .agg(count(lit(1)).as("n"), min($"part").as("part"), max($"part").as("maxp"))
-      dump("uniq_agg", perKey.groupBy($"part")
-        .agg(sum(when($"n" > 1, 1L).otherwise(0L)).as("dups"),
-          count(lit(1)).as("distinct"), sum($"n").as("total"),
-          max(when($"n" > 1, $"maxp")).as("max_dup_part")))
-    } else {
-      dump("uniq_agg", keyed
-        .repartition(ConstraintChecks.uniqShufflePartitions(keyed), $"h1", $"h2")
-        .agg(graft.sketch.UniqStatsAgg.uniqStats($"h1", $"h2", $"part").as("u")))
-    }
+    dump("uniq_agg", keyed
+      .repartition(ConstraintChecks.uniqShufflePartitions(keyed), $"h1", $"h2")
+      .agg(graft.sketch.UniqStatsAgg.uniqStats($"h1", $"h2", $"part").as("u")))
 
     // the fused stats scan (phase_stats): DocStatsAgg consumption shape
     val media = DocsGen.media(spark)
@@ -69,14 +56,10 @@ object PlanDump {
       docs, 1000, graft.sketch.DocStatsAgg.ModeBoth, Some(mediaSet),
       edges = Seq(10.0, 20.0, 30.0)))
 
-    // dirty-part violation rescans (write_viol_ref / write_viol_integrity);
-    // after = the fused path's hash-set probe, before = the per-job anti-join
-    dump("viol_ref_rows", if (suffix == "before")
-      ConstraintChecks.referentialRows(
-        docs.filter($"part" === 16), media, "plan").toDF()
-    else ConstraintChecks.referentialRows(
-      docs.filter($"part" === 16), media, "plan",
-      Some(graft.checks.PartStats.broadcastMediaSet(media))).toDF())
+    // dirty-part violation rescans (write_viol_ref / write_viol_integrity):
+    // the fused path's hash-set probe
+    dump("viol_ref_rows", ConstraintChecks.referentialRows(
+      docs.filter($"part" === 16), media, "plan", Some(mediaSet)).toDF())
     dump("viol_integrity_rows", ConstraintChecks.spanIntegrityRows(
       docs.filter($"part".isin(11, 12, 13, 14, 17)), "plan").toDF())
 
@@ -86,54 +69,6 @@ object PlanDump {
       "unique_orders", "ref_orders_customer", "emd_quantity_years",
       "psi_quantity_years").foreach { q =>
       dump(q, graft.entry.TpchQueries.queries(q)(spark, sfDir))
-    }
-    if (suffix == "before") {
-      // r05 formulations of the queries r06 restructured, reconstructed
-      // verbatim so the plan diff is on record (the live code now carries
-      // the restructured shapes; results are oracle-identical)
-      import org.apache.spark.sql.expressions.Window
-      val orders = spark.read.parquet(s"$sfDir/orders.parquet")
-      val st1 = orders
-        .select($"o_orderkey", pmod(xxhash64($"o_orderkey", lit("salt")), lit(16L)).as("salt"))
-        .groupBy($"o_orderkey", $"salt").agg(count(lit(1)).as("c"))
-      val perKey = st1.groupBy($"o_orderkey").agg(sum($"c").as("n"))
-      dump("unique_orders", perKey.agg(
-        count(lit(1)).as("distinct_keys"), sum($"n").as("total"),
-        sum(when($"n" > 1, 1L).otherwise(0L)).as("dup_keys")))
-      val li = spark.read.parquet(s"$sfDir/lineitem.parquet")
-        .select($"l_quantity".as("q"), (year($"l_shipdate") >= 1996).as("is_prod"))
-      val counts = li.groupBy($"q")
-        .agg(sum(when(!$"is_prod", 1L).otherwise(0L)).as("c_ref"),
-          sum(when($"is_prod", 1L).otherwise(0L)).as("c_prod"))
-      val w = Window.orderBy($"q").rowsBetween(Window.unboundedPreceding, 0)
-      val tot = counts.agg(sum($"c_ref").as("t_ref"), sum($"c_prod").as("t_prod"))
-      dump("ks_quantity_years", counts
-        .withColumn("cum_ref", sum($"c_ref").over(w))
-        .withColumn("cum_prod", sum($"c_prod").over(w))
-        .crossJoin(tot)
-        .select(abs($"cum_ref" / $"t_ref" - $"cum_prod" / $"t_prod").as("d"))
-        .agg(round(max($"d"), 6).as("ks_d")))
-      val wl = Window.orderBy($"q")
-      dump("emd_quantity_years", counts
-        .withColumn("cum_ref", sum($"c_ref").over(w))
-        .withColumn("cum_prod", sum($"c_prod").over(w))
-        .withColumn("q_next", lead($"q", 1).over(wl))
-        .filter($"q_next".isNotNull)
-        .crossJoin(tot)
-        .select((abs($"cum_ref" / $"t_ref" - $"cum_prod" / $"t_prod")
-          * ($"q_next" - $"q")).as("area"))
-        .agg(round(sum($"area"), 6).as("emd")))
-      val lib = spark.read.parquet(s"$sfDir/lineitem.parquet")
-        .select(least(floor($"l_quantity" / 5.0), lit(9.0)).cast("int").as("bucket"),
-          (year($"l_shipdate") >= 1996).as("is_prod"))
-      val bcounts = lib.groupBy($"bucket")
-        .agg(sum(when(!$"is_prod", 1L).otherwise(0L)).as("c_ref"),
-          sum(when($"is_prod", 1L).otherwise(0L)).as("c_prod"))
-      val btot = bcounts.agg(sum($"c_ref").as("t_ref"), sum($"c_prod").as("t_prod"))
-      dump("psi_quantity_years", bcounts.crossJoin(btot)
-        .select((greatest($"c_ref" / $"t_ref", lit(1e-6))).as("p"),
-          (greatest($"c_prod" / $"t_prod", lit(1e-6))).as("q"))
-        .agg(round(sum(($"q" - $"p") * log($"q" / $"p")), 6).as("psi")))
     }
 
     import scala.sys.process._

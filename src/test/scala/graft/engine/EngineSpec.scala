@@ -1,10 +1,17 @@
 package graft.engine
 
 import java.nio.file.Files
+import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.exchange.BroadcastExchangeExec
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.funsuite.AnyFunSuite
 import graft.checks.Fit
 import graft.model.DocsGen
+
+/** Walks physical plans through AQE query stages. */
+private object PlanWalk extends AdaptiveSparkPlanHelper
 
 class EngineSpec extends AnyFunSuite {
   lazy val spark = graft.SparkTestBase.spark
@@ -178,6 +185,76 @@ class EngineSpec extends AnyFunSuite {
     val (_, forcedJobs) = graft.SparkTestBase.jobsDuring(
       ValidationRun.run(docs, media, ref, cfg, broadcastMedia = Some(true)).verdicts.count())
     assert(autoJobs == forcedJobs, s"auto run: $autoJobs jobs, forced broadcast: $forcedJobs")
+    docs.unpersist()
+  }
+
+  test("kind consistency honours the media broadcast bound: no catalog broadcast " +
+    "in its plans, same kind_mismatch verdicts and rows as the broadcast run") {
+    val docs = DocsGen.docs(spark, 1200, DocsGen.goldenScenario.take(4)).cache()
+    val media = DocsGen.media(spark)
+    val ref = Fit.fit(docs.filter($"part" === 0), snapshotId = 4L, maxSample = 200)
+    val cfg = RunConfig(runId = "kind", maxSample = 200, numPermutations = 10,
+      kindConsistency = true)
+    // the catalog broadcasts of every kind-check plan run inside `f` (the
+    // counts plan aliases n_kind_mismatch, the rows plan carries the
+    // kind_mismatch literal), one entry per plan
+    def kindPlans[T](f: => T): (T, Seq[Int]) = {
+      val plans = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]()
+      val l = new QueryExecutionListener {
+        def onSuccess(fn: String, qe: QueryExecution, ns: Long): Unit =
+          plans.add(qe.executedPlan)
+        def onFailure(fn: String, qe: QueryExecution, e: Exception): Unit = ()
+      }
+      spark.listenerManager.register(l)
+      try {
+        val r = f
+        org.apache.spark.ListenerBusDrain.drain(spark.sparkContext)
+        import scala.jdk.CollectionConverters._
+        (r, plans.asScala.toSeq.filter(_.toString.contains("kind_mismatch"))
+          .map(p => PlanWalk.collectWithSubqueries(p) {
+            case b: BroadcastExchangeExec if b.output.exists(_.name == "media_kind") => b
+          }.size))
+      } finally spark.listenerManager.unregister(l)
+    }
+    def kindVerdicts(r: ValidationRun.Results) =
+      r.verdicts.collect().filter(_.check_id == "kind_mismatch")
+        .map(v => (v.part, v.distance, v.passed)).sortBy(_._1).toSeq
+    def rowsOf(ds: org.apache.spark.sql.Dataset[graft.checks.Violation]) =
+      ds.collect().filter(_.check_id == "kind_mismatch")
+        .map(v => (v.part, v.doc_id, v.detail)).sorted.toSeq
+
+    // broadcast run: its kind-check plans do broadcast the catalog
+    val ((bVerdicts, bRows), bPlans) = kindPlans {
+      val r = ValidationRun.run(docs, media, ref, cfg)
+      (kindVerdicts(r), rowsOf(r.violations))
+    }
+    assert(bPlans.nonEmpty && bPlans.forall(_ > 0))
+    assert(bRows.nonEmpty && bVerdicts.exists(!_._3))
+
+    val tmp = Files.createTempDirectory("kindsink").toString
+    val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try {
+      val bounded = cfg.copy(runId = "kind0", mediaBroadcastMaxBytes = 0L)
+      // lazy union (rows collected after the run) and sink (rows written
+      // inside the run) both go through the bounded join
+      val ((lVerdicts, lRows), lPlans) = kindPlans {
+        val r = ValidationRun.run(docs, media, ref, bounded)
+        (kindVerdicts(r), rowsOf(r.violations))
+      }
+      val ((sVerdicts, sRows), sPlans) = kindPlans {
+        val r = ValidationRun.run(docs, media, ref,
+          bounded.copy(violationsSink = Some(tmp)))
+        (kindVerdicts(r), rowsOf(spark.read.parquet(s"$tmp/src=kind")
+          .as[graft.checks.Violation]))
+      }
+      Seq(lPlans, sPlans).foreach { ps =>
+        assert(ps.size >= 2, s"expected the counts and rows plans, got ${ps.size}")
+        assert(ps.forall(_ == 0), s"catalog broadcasts per kind plan: $ps")
+      }
+      assert(lVerdicts == bVerdicts && sVerdicts == bVerdicts)
+      assert(lRows == bRows && sRows == bRows)
+    } finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
     docs.unpersist()
   }
 

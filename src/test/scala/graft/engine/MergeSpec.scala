@@ -184,6 +184,20 @@ class MergeSpec extends AnyFunSuite {
     assert(rewritten.rows == 114) // 120 minus the 6 upserted (moved to insert part)
     assert(rewritten.min.startsWith("doc-001-"))
     assert(r.snapshot.partStats(r.insertPart.get).rows == 6)
+    // the same upsert against a manifest stripped of key stats scans every
+    // part and leaves the same rows: pruning changes the cost, not the result
+    val (tableB, sB) = freshTable()
+    val manifestB = java.nio.file.Paths.get(tableB, "_snapshots", s"v${sB.snapshotId}.json")
+    Files.writeString(manifestB,
+      Files.readString(manifestB).replaceFirst(""","part_stats":\{[^}]*\}""", ""))
+    assert(SnapshotCatalog.readManifest(tableB, sB.snapshotId).partStats.isEmpty)
+    val updB = SnapshotCatalog.read(spark, table, r.snapshot.snapshotId)
+      .filter($"part" === r.insertPart.get).drop("part")
+    val rB = Merge.merge(spark, tableB, updB, Seq.empty[String].toDF("doc_id"))
+    assert(rB.candidateParts == Seq(0, 1, 2))
+    def rowsOf(t: String, id: Long) = SnapshotCatalog.read(spark, t, id).drop("part")
+      .collect().map(_.toString).sorted.toSeq
+    assert(rowsOf(tableB, rB.snapshot.snapshotId) == rowsOf(table, r.snapshot.snapshotId))
     // rollback carries stats through
     val rb = SnapshotCatalog.rollbackTo(table, s1.snapshotId)
     assert(rb.partStats == s1.partStats)
