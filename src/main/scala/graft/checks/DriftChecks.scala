@@ -687,7 +687,12 @@ object DriftChecks {
     requirePermutations(numPermutations)
     require(permsPerTask >= 1, s"mmd: permsPerTask must be >= 1, got $permsPerTask")
     val parts = samples.keys.toSeq.sorted
-    val bc = spark.sparkContext.broadcast((ref.refSample, ref.sigma, samples))
+    // one flat row-major array per sample: it serializes into the broadcast
+    // as a single primitive block instead of one object per row
+    val d = (ref.refSample.iterator ++ samples.valuesIterator.flatten)
+      .nextOption().fold(0)(_.length)
+    val bc = spark.sparkContext.broadcast((FlatRows.of(ref.refSample, d), ref.sigma,
+      samples.map { case (p, s) => p -> FlatRows.of(s, d) }))
     val perPart = numPermutations + 1 // permId 0 = observed (identity split)
     val chunks = for {
       part <- parts
@@ -698,8 +703,11 @@ object DriftChecks {
       .mapPartitions { it =>
         val (refSample, sigma, prodSamples) = bc.value
         it.map { case (part, s, e) =>
-          val (obs, ge) = observedAndExceedances(refSample ++ prodSamples(part),
-            refSample.length, sigma, part, s, e, randomState)
+          val prod = prodSamples(part)
+          val pool = Array.tabulate(refSample.rows + prod.rows)(i =>
+            if (i < refSample.rows) refSample.row(i) else prod.row(i - refSample.rows))
+          val (obs, ge) = observedAndExceedances(pool, refSample.rows, sigma, part,
+            s, e, randomState)
           (part, obs, ge)
         }
       }
@@ -717,6 +725,26 @@ object DriftChecks {
         Map("sigma" -> ref.sigma, "n_ref" -> ref.refSample.length.toDouble,
           "n_prod" -> samples(part).length.toDouble,
           "permutations" -> numPermutations.toDouble), ref.snapshotId)
+    }
+  }
+
+  /** `rows` rows of width `d`, row-major in `values` — the broadcast shape
+    * of an MMD sample. */
+  private final case class FlatRows(rows: Int, d: Int, values: Array[Double]) {
+    def row(i: Int): Array[Double] = java.util.Arrays.copyOfRange(values, i * d, (i + 1) * d)
+  }
+
+  private object FlatRows {
+    def of(sample: Array[Array[Double]], d: Int): FlatRows = {
+      val values = new Array[Double](sample.length * d)
+      var i = 0
+      while (i < sample.length) {
+        require(sample(i).length == d,
+          s"mmd: sample rows must share one width, got ${sample(i).length} and $d")
+        System.arraycopy(sample(i), 0, values, i * d, d)
+        i += 1
+      }
+      FlatRows(sample.length, d, values)
     }
   }
 

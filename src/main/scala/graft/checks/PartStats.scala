@@ -1,8 +1,10 @@
 package graft.checks
 
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions._
-import graft.sketch.{KllOps, KllSketchAgg}
+import graft.sketch.{KllOps, KllSketchAgg, LongHashSet}
 
 /** Per-partition summary statistics, computed in ONE scan + one shuffle.
   *
@@ -167,33 +169,62 @@ object PartStats {
     * membership probes — see graft.sketch.LongHashSet for the collision
     * budget). The big-catalog path stays ConstraintChecks.referential's
     * shuffled anti-join, which is also the exact-audit path —
-    * ValidationRun auto-selects between the two on a size estimate.
+    * ValidationRun auto-selects between the two.
     *
-    * FAIL-LOUD guard: the driver collect below is bounded by `maxEntries`
-    * (checked with a cheap count FIRST — metadata-only on parquet), so a
-    * forced broadcast of a catalog that cannot fit driver memory dies with
-    * an actionable message instead of an OOM mid-collect. `knownCount`: the
-    * catalog's entry count when the caller already took it (the cap is
-    * still checked against it; only the second count job is skipped). */
+    * FAIL-LOUD guard: a catalog of more than `maxEntries` refs is never
+    * brought to the driver ([[mediaSetWithin]]); a forced broadcast of one
+    * dies with its exact ref count instead of an OOM. */
+  def broadcastMediaSet(media: DataFrame, maxEntries: Long = BroadcastMaxEntries)
+      : Broadcast[LongHashSet] =
+    mediaSetWithin(media, maxEntries) match {
+      case Right(set) => set
+      case Left(n) => throw new IllegalArgumentException(
+        s"media catalog has $n refs > broadcast cap $maxEntries: the driver-" +
+          "side broadcast set would risk an OOM. Use the shuffled anti-join " +
+          "path (broadcastMedia = Some(false) on ValidationRun.run) or raise " +
+          "the cap deliberately.")
+    }
+
   /** Entry cap for [[broadcastMediaSet]] — shared with ValidationRun's AUTO
     * path selection so auto never picks a broadcast the cap then rejects. */
   val BroadcastMaxEntries: Long = 20L * 1000 * 1000
 
-  def broadcastMediaSet(media: DataFrame, maxEntries: Long = BroadcastMaxEntries,
-                        knownCount: Option[Long] = None)
-      : org.apache.spark.broadcast.Broadcast[graft.sketch.LongHashSet] = {
-    val cat = media.select("media_ref")
-    val n = knownCount.getOrElse(cat.count())
-    require(n <= maxEntries,
-      s"media catalog has $n refs > broadcast cap $maxEntries: the driver-" +
-        "collect broadcast set would risk an OOM. Use the shuffled anti-join " +
-        "path (broadcastMedia = Some(false) on ValidationRun.run) or raise " +
-        "the cap deliberately.")
-    val refs = cat.collect()
-    val set = new graft.sketch.LongHashSet(refs.length)
-    refs.foreach(r => set.add(graft.sketch.LongHashSet.hashUtf8(
-      org.apache.spark.unsafe.types.UTF8String.fromString(r.getString(0)))))
-    media.sparkSession.sparkContext.broadcast(set)
+  /** The media set in ONE executor-side job: each task counts its catalog
+    * rows and hashes their refs, shipping the hashes only while its own
+    * count is within `maxEntries`; the driver keeps them only while the
+    * running total is, too. So the driver holds at most about two caps of
+    * longs (the kept hashes plus one arriving task's) and never a catalog
+    * over the cap. Right(broadcast set) when the catalog has ≤ `maxEntries`
+    * rows, else Left(its exact row count). Null refs are counted, not
+    * hashed: they match no span. */
+  def mediaSetWithin(media: DataFrame, maxEntries: Long)
+      : Either[Long, Broadcast[LongHashSet]] = {
+    val rows = media.select("media_ref").queryExecution.toRdd
+    val cap = maxEntries
+    var total = 0L
+    val kept = scala.collection.mutable.ArrayBuffer.empty[Array[Long]]
+    media.sparkSession.sparkContext.runJob(rows, (it: Iterator[InternalRow]) => {
+      var n = 0L
+      var hashes = new scala.collection.mutable.ArrayBuilder.ofLong
+      while (it.hasNext) {
+        val r = it.next()
+        n += 1
+        if (hashes != null) {
+          if (n > cap) hashes = null
+          else if (!r.isNullAt(0)) hashes += LongHashSet.hashUtf8(r.getUTF8String(0))
+        }
+      }
+      (n, if (hashes == null) null else hashes.result())
+    }, (_: Int, res: (Long, Array[Long])) => {
+      total += res._1
+      if (total <= cap) kept += res._2 else kept.clear()
+    })
+    if (total > cap) Left(total)
+    else {
+      val set = new LongHashSet(total.toInt)
+      kept.foreach(_.foreach(set.add))
+      Right(media.sparkSession.sparkContext.broadcast(set))
+    }
   }
 
   /** Compute per-partition summaries. `docs` must have (doc_id, spans, part).

@@ -152,16 +152,14 @@ object Merge {
       out.write.mode("append").option("compression", codec)
         .partitionBy("part").parquet(s"$table/data")
 
-      // manifest stats for the fresh parts: one narrow (key, part) column
-      // scan of just the fresh dirs — O(affected + source), keeps the E31
-      // pruning sharp across merges instead of degrading to stat-less parts
+      // manifest stats for the fresh parts from the footers just written
+      // (no Spark job) — keeps the E31 pruning sharp across merges instead
+      // of degrading to stat-less parts
       val freshIds = rewriteMap.values.toSeq ++ insertPart
       val freshStats =
         if (target.schema(keyCol).dataType != org.apache.spark.sql.types.StringType)
           Map.empty[Int, SnapshotCatalog.PartKeyStats]
-        else SnapshotCatalog.keyStatsOf(
-          SnapshotCatalog.readParts(spark, table, freshIds, Some(out.schema))
-            .select(col(keyCol), col("part")), keyCol)
+        else SnapshotCatalog.footerKeyStats(spark, table, freshIds, keyCol)
       val snap = SnapshotCatalog.commitReplacing(table, affected.toSet,
         freshIds, freshStats)
       MergeResult(snap, rewriteMap, insertPart, noop = false,

@@ -82,6 +82,66 @@ object SnapshotCatalog {
         s.stripPrefix("v").stripSuffix(".json").toLong }
       .sorted
 
+  /** Ids recordable in manifest stats without a JSON escaper — conservative:
+    * an id outside this set just means its part carries no stats (always a
+    * pruning candidate), never a broken manifest. */
+  private val SafeKey = "[A-Za-z0-9._:/-]+".r
+
+  /** Key-column stats of freshly written parts from their Parquet footers —
+    * no Spark job: per part, the row counts summed over every data file's
+    * row groups, and the key's min/max over the row groups' statistics
+    * under Parquet's unsigned-lexicographic binary order (for the ASCII ids
+    * SafeKey admits, the same order as `UTF8String` and `String`). A part
+    * whose key has no non-null value, a row group without statistics for
+    * it (or whose min/max were not written), or an id outside SafeKey
+    * leaves the part stat-less — always a pruning candidate, never wrong. */
+  private[engine] def footerKeyStats(spark: SparkSession, table: String,
+                                     parts: Seq[Int], statsKey: String): Map[Int, PartKeyStats] = {
+    import org.apache.parquet.HadoopReadOptions
+    import org.apache.parquet.hadoop.ParquetFileReader
+    import org.apache.parquet.hadoop.util.HadoopInputFile
+    import org.apache.parquet.io.api.Binary
+    import org.apache.parquet.schema.PrimitiveComparator.UNSIGNED_LEXICOGRAPHICAL_BINARY_COMPARATOR
+    val conf = spark.sessionState.newHadoopConf()
+    // built once: an open() without options builds a fresh Hadoop
+    // Configuration per file (~7 ms each, 1.4 s over a 192-file commit)
+    val opts = HadoopReadOptions.builder(conf).build()
+    parts.distinct.flatMap { p =>
+      val dir = Paths.get(table, "data", s"part=$p")
+      val files = listNames(dir).filterNot(n => n.startsWith("_") || n.startsWith("."))
+        .map(dir.resolve).filter(Files.isRegularFile(_))
+      var rows = 0L
+      var known = files.nonEmpty
+      var mn: Binary = null
+      var mx: Binary = null
+      files.foreach { f =>
+        val reader = ParquetFileReader.open(HadoopInputFile.fromPath(
+          new org.apache.hadoop.fs.Path(f.toAbsolutePath.toUri), conf), opts)
+        try reader.getFooter.getBlocks.asScala.foreach { block =>
+          rows += block.getRowCount
+          block.getColumns.asScala.find(_.getPath.toDotString == statsKey)
+            .map(_.getStatistics) match {
+            case Some(st) if st != null && st.hasNonNullValue =>
+              val (lo, hi) = (st.genericGetMin.asInstanceOf[Binary],
+                st.genericGetMax.asInstanceOf[Binary])
+              if (mn == null || UNSIGNED_LEXICOGRAPHICAL_BINARY_COMPARATOR.compare(lo, mn) < 0) mn = lo
+              if (mx == null || UNSIGNED_LEXICOGRAPHICAL_BINARY_COMPARATOR.compare(hi, mx) > 0) mx = hi
+            // an all-null row group bounds nothing; any other gap is unknown
+            case Some(st) if st != null && st.isNumNullsSet &&
+                st.getNumNulls == block.getRowCount =>
+            case _ => known = false
+          }
+        } finally reader.close()
+      }
+      if (!known || mn == null) None
+      else {
+        val (lo, hi) = (mn.toStringUsingUTF8, mx.toStringUsingUTF8)
+        if (SafeKey.matches(lo) && SafeKey.matches(hi)) Some(p -> PartKeyStats(lo, hi, rows))
+        else None
+      }
+    }.toMap
+  }
+
   /** Append a new snapshot: writes `df` (must carry an int `part` column)
     * partitioned by part under data/, then commits manifest v(N+1) whose
     * part set is the CURRENT manifest's parts plus the appended ones —
@@ -91,38 +151,12 @@ object SnapshotCatalog {
     *
     * `appendedParts`: the part ids `df` carries, when the caller knows them
     * (a generator's scenario spec, an ingest batch's partition range) —
-    * skips the post-write footer scan AND enables the loud orphan-reuse
-    * guard. Default None derives fresh parts as written-dirs minus
-    * historically-referenced dirs (one partition-column-only footer job).
+    * skips the post-write listing of `<table>/data` AND enables the loud
+    * orphan-reuse guard. Default None derives fresh parts as written-dirs
+    * minus historically-referenced dirs (a driver-side listing, no job).
     * `codec`: parquet compression. zstd trades plentiful CPU for scarce
     * memory/disk bandwidth — the right default for scan-bound validation
     * passes (see BASELINE.md bandwidth probe); snappy kept for compat. */
-  /** Ids recordable in manifest stats without a JSON escaper — conservative:
-    * an id outside this set just means its part carries no stats (always a
-    * pruning candidate), never a broken manifest. */
-  private val SafeKey = "[A-Za-z0-9._:/-]+".r
-
-  /** Key-column stats of a batch: one aggregation job over `df`
-    * (min/max/count per part — O(batch), the price Iceberg also pays to
-    * collect file bounds at write). Empty when the key column is
-    * absent/non-string or an id needs escaping. */
-  private[engine] def keyStatsOf(df: DataFrame, statsKey: String): Map[Int, PartKeyStats] = {
-    import org.apache.spark.sql.functions.{col, count, lit, max, min}
-    if (!df.columns.contains(statsKey) ||
-        df.schema(statsKey).dataType != org.apache.spark.sql.types.StringType)
-      return Map.empty
-    df.groupBy(col("part"))
-      .agg(min(col(statsKey)).as("mn"), max(col(statsKey)).as("mx"),
-        count(lit(1)).as("n"))
-      .collect().flatMap { r =>
-        (Option(r.getString(1)), Option(r.getString(2))) match {
-          case (Some(mn), Some(mx)) if SafeKey.matches(mn) && SafeKey.matches(mx) =>
-            Some(r.getInt(0) -> PartKeyStats(mn, mx, r.getLong(3)))
-          case _ => None
-        }
-      }.toMap
-  }
-
   def commit(table: String, df: DataFrame, codec: String = "zstd",
              appendedParts: Option[Seq[Int]] = None,
              statsKey: Option[String] = Some("doc_id"),
@@ -188,18 +222,16 @@ object SnapshotCatalog {
         // orphaned by a rollback are in `historical`, so they stay out
         dataPartDirs(table) -- historical
     }
-    // key stats from the bytes JUST WRITTEN (narrow re-read of the fresh
-    // part dirs, as Merge does) — never from a second evaluation of `df`:
-    // a non-deterministic input (sampled/repartitioned upstream) could
-    // otherwise record min/max that disagree with the data on disk, making
-    // key-range pruning silently unsound; this also drops the extra full
-    // pass per commit. Only the fresh dirs are read, under `df.schema`, so
-    // no footer is read to infer one.
+    // key stats from the bytes JUST WRITTEN: the fresh part dirs' Parquet
+    // footers (footerKeyStats, no Spark job) — never from a second
+    // evaluation of `df`: a non-deterministic input (sampled/repartitioned
+    // upstream) could otherwise record min/max that disagree with the data
+    // on disk, making key-range pruning silently unsound; this also drops
+    // the extra full pass per commit.
     val freshStats: Map[Int, PartKeyStats] = statsKey match {
       case Some(k) if fresh.nonEmpty && df.columns.contains(k) &&
           df.schema(k).dataType == org.apache.spark.sql.types.StringType =>
-        keyStatsOf(readParts(spark, table, fresh.toSeq, Some(df.schema))
-          .select(k, "part"), k)
+        footerKeyStats(spark, table, fresh.toSeq, k)
       case _ => Map.empty
     }
     val parts = (live ++ fresh).toSeq.sorted
@@ -718,8 +750,7 @@ object SnapshotCatalog {
       val freshStats =
         if (target.schema(keyCol).dataType != org.apache.spark.sql.types.StringType)
           Map.empty[Int, PartKeyStats]
-        else keyStatsOf(readParts(spark, table, freshIds, Some(target.schema))
-          .select(col(keyCol), col("part")), keyCol)
+        else footerKeyStats(spark, table, freshIds, keyCol)
       commitReplacing(table, affected.toSet, freshIds, freshStats,
         clearDeleteFiles = true)
     } finally allKeys.unpersist(blocking = false)

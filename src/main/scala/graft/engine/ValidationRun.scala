@@ -26,6 +26,13 @@ case class RunConfig(
     // same driver threads that ran the check — the (potentially large)
     // violation materialization then overlaps the remaining check phases
     // instead of serializing after them. run() returns after all writes.
+    // Layout: zstd parquet, rows rebalanced by part, so AQE sizes the files
+    // to spark.sql.adaptive.advisoryPartitionSizeInBytes — one file per
+    // check at small row counts, advisory-sized files at scale, a part's
+    // rows kept together (skewed parts split). A clean check writes one
+    // empty file that carries the Violation schema. Without AQE the
+    // rebalance is a plain hash repartition by part into
+    // spark.sql.shuffle.partitions files at most.
     violationsSink: Option[String] = None,
     // echo the bounded feature sample each MMD verdict consumed into its
     // Verdict.input_values — parity with the reference's
@@ -44,8 +51,8 @@ case class RunConfig(
     // plan-estimated size is at or below this; larger catalogs take the
     // shuffled anti-join (AQE-converted/split at runtime) — a billion-row
     // catalog can no longer OOM the driver by DEFAULT. 256 MB of estimated
-    // scan bytes ≈ well under the 20M-entry collect cap the broadcast
-    // builder separately enforces (PartStats.broadcastMediaSet).
+    // scan bytes ≈ well under the 20M-entry cap the broadcast set
+    // builder separately enforces (PartStats.mediaSetWithin).
     mediaBroadcastMaxBytes: Long = 256L << 20,
     // robust-fence width for the per-partition volume check (E27): a part
     // flags when |count − median| > volumeK · 1.4826 · MAD over the run's
@@ -125,6 +132,16 @@ object ValidationRun {
     r
   }
 
+  /** The one writer of violation rows: every sink write of run() and the
+    * appends of runIncremental/runResumable. A rebalance by `part` lets AQE
+    * size the files to its advisory partition size — one file per check at
+    * small row counts, advisory-sized files at scale, skewed parts split —
+    * while each part's rows stay together, which is what zstd compresses
+    * well. The table data's codec (SnapshotCatalog.commit) is zstd too. */
+  private def writeViolations(rows: Dataset[_], mode: String, path: String): Unit =
+    rows.hint("rebalance", col("part")).write.mode(mode)
+      .option("compression", "zstd").parquet(path)
+
   /** Plan-estimated byte size of the media catalog's ref column — the
     * auto-selection signal for the referential path. For file sources this
     * is the (compression-adjusted) scan size from the logical plan's stats;
@@ -151,43 +168,18 @@ object ValidationRun {
     import scala.concurrent.duration.Duration
     implicit val ec: ExecutionContext = ValidationRun.jobPool
 
-    // mediaCount: the catalog's entry count when AUTO selection took it —
-    // handed to broadcastMediaSet so the catalog is counted once per run
-    val (useBroadcastMedia, mediaCount) = broadcastMedia match {
-      case Some(forced) => (forced, None)
-      case None =>
-        val est = estimateCatalogBytes(media)
-        if (est > BigInt(cfg.mediaBroadcastMaxBytes)) {
-          log.info(s"referential path: catalog estimate $est B > " +
-            s"${cfg.mediaBroadcastMaxBytes} B - selecting the shuffled anti-join")
-          (false, None)
-        } else {
-          // the byte estimate can pass on heavily-compressed catalogs whose
-          // ENTRY count still exceeds the broadcast-set cap (tens of millions
-          // of prefix-compressed refs): check the same bound
-          // broadcastMediaSet enforces, so AUTO falls back to the anti-join
-          // instead of dying at the cap's require mid-run (a FORCED
-          // Some(true) keeps the fail-loud contract). Metadata-only count on
-          // file sources; bounded by the small byte estimate otherwise.
-          val n = media.select("media_ref").count()
-          val ok = n <= PartStats.BroadcastMaxEntries
-          if (!ok) log.info(s"referential path: catalog has $n refs > entry " +
-            s"cap ${PartStats.BroadcastMaxEntries} - selecting the shuffled anti-join")
-          (ok, Some(n))
-        }
-    }
-
     // Independent check jobs are launched CONCURRENTLY from driver threads —
     // Spark's scheduler interleaves their tasks across all cores, so the
     // pass's wall-clock is the max of the scan-bound phases, not their sum.
     // (Sequential submission leaves cores idle in every job's tail.)
 
-    // eager per-check violation writes (no-op without a sink)
+    // eager per-check violation writes (no-op without a sink); `ds` is
+    // built on the write's own thread, off the path to the MMD fan-out
     val sinkWrites = new java.util.concurrent.ConcurrentLinkedQueue[Future[Unit]]()
     def sinkWrite(name: String, ds: => Dataset[Violation]): Unit =
       cfg.violationsSink.foreach { sink =>
         sinkWrites.add(Future(timed(s"write_viol_$name")(
-          ds.write.mode("overwrite").parquet(s"$sink/src=$name"))))
+          writeViolations(ds, "overwrite", s"$sink/src=$name"))))
       }
 
     // schema gate (E20): driver-metadata check, zero executor time —
@@ -212,6 +204,32 @@ object ValidationRun {
       sinkWrite("unique", r._1)
       r
     })
+    // referential path selection, after uniqueness is submitted (it needs
+    // no catalog). AUTO broadcasts the catalog only when its plan estimate
+    // is within cfg.mediaBroadcastMaxBytes AND the set-building job counts
+    // at most BroadcastMaxEntries refs (a heavily compressed catalog can
+    // pass the byte estimate with tens of millions of refs); otherwise it
+    // takes the anti-join. A FORCED Some(true) fails loud at the cap.
+    val mediaSet: Option[org.apache.spark.broadcast.Broadcast[graft.sketch.LongHashSet]] =
+      broadcastMedia match {
+        case Some(true) => Some(PartStats.broadcastMediaSet(media))
+        case Some(false) => None
+        case None =>
+          val est = estimateCatalogBytes(media)
+          if (est > BigInt(cfg.mediaBroadcastMaxBytes)) {
+            log.info(s"referential path: catalog estimate $est B > " +
+              s"${cfg.mediaBroadcastMaxBytes} B - selecting the shuffled anti-join")
+            None
+          } else PartStats.mediaSetWithin(media, PartStats.BroadcastMaxEntries) match {
+            case Right(set) => Some(set)
+            case Left(n) =>
+              log.info(s"referential path: catalog has $n refs > entry cap " +
+                s"${PartStats.BroadcastMaxEntries} - selecting the shuffled anti-join")
+              None
+          }
+      }
+    val useBroadcastMedia = mediaSet.isDefined
+
     // referential (E6). Three layouts, auto-laddered:
     //  - broadcastable catalog: dangling-ref COUNTING rides the fused scan
     //    (broadcast media set checked inside DocStatsAgg) — no separate pass
@@ -235,10 +253,6 @@ object ValidationRun {
       sinkWrite("ref", r._1)
       r
     }))
-    val mediaSet =
-      if (useBroadcastMedia) Some(PartStats.broadcastMediaSet(media, knownCount = mediaCount))
-      else None
-
     // opt-in E43: one join against the catalog (broadcast under the same
     // bound as the referential path), O(parts) counts back, row evidence to
     // the sink like every other constraint check
@@ -269,35 +283,35 @@ object ValidationRun {
     }
     // violation rows of the stats-derived checks: lazy datasets over the
     // dirty partitions only (pruned rescans — no-ops on a clean table).
+    // Their counts come from the scan; the Datasets are built where they
+    // are consumed (a sink write's thread, or the no-sink union), so
+    // planning them stays off the path to the MMD fan-out.
     // Referential rows come from the scan's counts ONLY when referential
     // rode it (the broadcast set exists — rows then share the COUNTING
     // scan's membership predicate: one codegen'd probe stage, no per-job
     // join build); otherwise the standalone fRef future owns them.
-    val fusedRef: Option[(Dataset[Violation], Map[Int, Long])] = mediaSet.map { set =>
-      val counts = summaries.collect {
-        case (p, s) if s.danglingRefSpans > 0 => p -> s.danglingRefSpans
-      }
-      val viol =
-        if (counts.isEmpty) spark.emptyDataset[Violation]
-        else ConstraintChecks.referentialRows(
-          docs.filter($"part".isin(counts.keys.toSeq: _*)), media, cfg.runId, Some(set))
-      (viol, counts)
+    val fusedRefCounts: Option[Map[Int, Long]] = mediaSet.map(_ => summaries.collect {
+      case (p, s) if s.danglingRefSpans > 0 => p -> s.danglingRefSpans
+    })
+    lazy val fusedRefViol: Dataset[Violation] = fusedRefCounts match {
+      case Some(counts) if counts.nonEmpty => ConstraintChecks.referentialRows(
+        docs.filter($"part".isin(counts.keys.toSeq: _*)), media, cfg.runId, mediaSet)
+      case _ => spark.emptyDataset[Violation]
     }
     // span-integrity counts come FREE from the stats pass; violation ROWS are
     // materialized from the dirty partitions only — partition pruning makes
     // this near-zero when the table is clean (the common case at scale)
-    val intViol: Dataset[Violation] = {
-      val dirty = summaries.collect {
-        case (p, s) if s.ordViolationDocs > 0 || s.nullKindDocs > 0 => p
-      }.toSeq
-      if (dirty.isEmpty) spark.emptyDataset[Violation]
-      else ConstraintChecks.spanIntegrityRows(docs.filter($"part".isin(dirty: _*)), cfg.runId)
-    }
+    val intDirty = summaries.collect {
+      case (p, s) if s.ordViolationDocs > 0 || s.nullKindDocs > 0 => p
+    }.toSeq
+    lazy val intViol: Dataset[Violation] =
+      if (intDirty.isEmpty) spark.emptyDataset[Violation]
+      else ConstraintChecks.spanIntegrityRows(docs.filter($"part".isin(intDirty: _*)), cfg.runId)
     // launch the stats-derived violation writes BEFORE the MMD fan-out so
     // the dirty-partition rescans overlap it (and the uniqueness tail).
     // src=ref is written here only on the fused path: an overwrite would
     // clobber the standalone path's rows
-    fusedRef.foreach(r => sinkWrite("ref", r._1))
+    if (fusedRefCounts.isDefined) sinkWrite("ref", fusedRefViol)
     sinkWrite("integrity", intViol)
     val mmdVerdicts = timed("mmd_fanout")(DriftChecks.mmd(spark, cfg.runId, cfg.alpha,
       ref, samples, cfg.numPermutations, cfg.randomState))
@@ -305,8 +319,8 @@ object ValidationRun {
 
     val (uniqViol, uniqStats) = Await.result(fUniq, Duration.Inf)
     // exactly one of the two referential paths ran
-    val (refViol, refCounts) =
-      fRef.map(Await.result(_, Duration.Inf)).getOrElse(fusedRef.get)
+    val (refViol, refCounts) = fRef.map(Await.result(_, Duration.Inf))
+      .getOrElse((fusedRefViol, fusedRefCounts.get))
     val uniqCounts = uniqStats.map { case (p, s) => p -> s.dupKeys }
     val ordCounts = summaries.collect { case (p, s) if s.ordViolationDocs > 0 => p -> s.ordViolationDocs }
     val nkCounts = summaries.collect { case (p, s) if s.nullKindDocs > 0 => p -> s.nullKindDocs }
@@ -470,8 +484,8 @@ object ValidationRun {
       res.verdicts.filter(_.check_id != "volume").toDF()
         .unionByName(spark.createDataset(xVerdicts).toDF())
         .write.mode("append").partitionBy("part").parquet(resultsPath)
-      res.violations.toDF().unionByName(xViol.toDF())
-        .write.mode("append").parquet(violationsPath)
+      writeViolations(res.violations.toDF().unionByName(xViol.toDF()), "append",
+        violationsPath)
       xCounts
     } else Map.empty
 
@@ -565,7 +579,7 @@ object ValidationRun {
     // resumed batches, so it is ignored here
     val res = run(subset, media, ref, cfg.copy(violationsSink = None))
     res.verdicts.write.mode("append").partitionBy("part").parquet(resultsPath)
-    res.violations.write.mode("append").parquet(violationsPath)
+    writeViolations(res.violations, "append", violationsPath)
     todo
   }
 }

@@ -165,11 +165,12 @@ class EngineSpec extends AnyFunSuite {
       graft.checks.PartStats.broadcastMediaSet(media, maxEntries = 2)
     }
     assert(ex.getMessage.contains("broadcast cap"))
-    // ...also when the caller hands over the count it already took
-    val exKnown = intercept[IllegalArgumentException] {
-      graft.checks.PartStats.broadcastMediaSet(media, maxEntries = 2, knownCount = Some(3L))
+    // ...and names the catalog's exact ref count
+    val exCount = intercept[IllegalArgumentException] {
+      graft.checks.PartStats.broadcastMediaSet(media, maxEntries = 2)
     }
-    assert(exKnown.getMessage.contains("media catalog has 3 refs > broadcast cap 2"))
+    assert(exCount.getMessage.contains(
+      s"media catalog has ${media.count()} refs > broadcast cap 2"))
     docs.unpersist()
   }
 
