@@ -365,23 +365,31 @@ object ConstraintChecks {
   def uniquenessCross(newDocs: DataFrame, baseDocs: DataFrame, runId: String,
                       broadcastNew: Option[Boolean] = None,
                       broadcastMaxBytes: Long = 256L << 20): (Dataset[Violation], Map[Int, Long]) = {
-    val spark = newDocs.sparkSession
-    import spark.implicits._
     val useBroadcast = broadcastNew.getOrElse {
       val est = newDocs.select("doc_id").queryExecution.optimizedPlan.stats.sizeInBytes
       est <= BigInt(broadcastMaxBytes)
     }
-    val cached = crossCollided(newDocs, baseDocs, useBroadcast).cache()
+    // the materialized collisions are bounded by the new side
+    violationsOf(crossCollided(newDocs, baseDocs, useBroadcast), runId,
+      "unique_doc_id_cross", lit("doc_id already present in base snapshot"))
+  }
+
+  /** Per-part counts and materialized [[Violation]] rows of a frame of
+    * violating (part, doc_id, …) rows, computed from one cache of it. The
+    * rows are checkpointed while the cache is alive, and the cache is then
+    * dropped: a cached plan left registered would be re-listed by every
+    * later write to its path. */
+  private def violationsOf(rows: DataFrame, runId: String, checkId: String,
+                           detail: Column): (Dataset[Violation], Map[Int, Long]) = {
+    import rows.sparkSession.implicits._
+    val cached = rows.cache()
     try {
       val perPart = cached.groupBy($"part").count()
         .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
       val violations = cached
-        .select(lit(runId).as("run_id"), $"part",
-          lit("unique_doc_id_cross").as("check_id"), $"doc_id",
-          lit("doc_id already present in base snapshot").as("detail"))
+        .select(lit(runId).as("run_id"), $"part", lit(checkId).as("check_id"),
+          $"doc_id", detail.as("detail"))
         .as[Violation]
-        // materialize rows while the cache is alive: collisions are bounded
-        // by the new side and violation consumers write them out anyway
         .localCheckpoint(true)
       (violations, perPart)
     } finally cached.unpersist()
@@ -402,22 +410,9 @@ object ConstraintChecks {
       .select($"part", $"doc_id", explode(col("spans.media_ref")).as("media_ref"))
       .filter($"media_ref".isNotNull)
     val cat = media.select($"media_ref")
-    val dangling = refs
-      .join(if (broadcastMedia) broadcast(cat) else cat, Seq("media_ref"), "left_anti")
-      .cache()
-    try {
-      val perPart = dangling.groupBy($"part").count()
-        .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
-      val violations = dangling
-        .select(lit(runId).as("run_id"), $"part",
-          lit("ref_media").as("check_id"), $"doc_id",
-          concat(lit("dangling media_ref "), $"media_ref").as("detail"))
-        .as[Violation]
-        // materialize rows while the cache is alive: a cached plan left
-        // registered would be re-listed by every later write to its path
-        .localCheckpoint(true)
-      (violations, perPart)
-    } finally dangling.unpersist()
+    violationsOf(
+      refs.join(if (broadcastMedia) broadcast(cat) else cat, Seq("media_ref"), "left_anti"),
+      runId, "ref_media", concat(lit("dangling media_ref "), $"media_ref"))
   }
 
   /** Span-order + null-kind integrity (the order-significance invariant —
@@ -504,22 +499,9 @@ object ConstraintChecks {
     refs.join(broadcast(present), Seq("media_ref"), "left_anti")
   }
 
-  def referentialProbeSide(docs: DataFrame, media: DataFrame, runId: String): (Dataset[Violation], Map[Int, Long]) = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    val dangling = probeSideDangling(docs, media).cache()
-    try {
-      val perPart = dangling.groupBy($"part").count()
-        .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
-      val violations = dangling
-        .select(lit(runId).as("run_id"), $"part",
-          lit("ref_media").as("check_id"), $"doc_id",
-          concat(lit("dangling media_ref "), $"media_ref").as("detail"))
-        .as[Violation]
-        .localCheckpoint(true)
-      (violations, perPart)
-    } finally dangling.unpersist()
-  }
+  def referentialProbeSide(docs: DataFrame, media: DataFrame, runId: String): (Dataset[Violation], Map[Int, Long]) =
+    violationsOf(probeSideDangling(docs, media), runId, "ref_media",
+      concat(lit("dangling media_ref "), col("media_ref")))
 
   /** LAZY violation-row variants: no cache, no count jobs. Used when the
     * per-part counts are already known from the fused stats scan — the

@@ -1,5 +1,7 @@
 package graft.checks
 
+import org.apache.spark.HashPartitioner
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.SparkSession
 import graft.sketch.KllOps
 import graft.stats.{Mmd, StatMath}
@@ -12,8 +14,8 @@ import graft.stats.{Mmd, StatMath}
   * KS / χ² / PSI run on the per-partition SUMMARIES (KLL sketches, exact
   * category counts) produced by the single full-data stats pass — no second
   * scan of the table. MMD runs on the bounded per-partition samples with the
-  * permutation test fanned out over `spark.range`, mirroring the reference's
-  * multiprocessing permutation pool (ml/training.py:528-534) as Spark tasks.
+  * permutation test fanned out as Spark tasks beside them, mirroring the
+  * reference's multiprocessing permutation pool (ml/training.py:528-534).
   */
 object DriftChecks {
 
@@ -76,12 +78,19 @@ object DriftChecks {
       }
     }
 
+  /** The category universe of the span-kind checks — every kind either side
+    * holds, sorted — and the reference's counts over it. */
+  private def kindUniverse(ref: RefState,
+                           summaries: Map[Int, PartSummary]): (Seq[String], Array[Long]) = {
+    val cats = (ref.kindHist.keySet ++ summaries.values.flatMap(_.kindHist.keySet)).toSeq.sorted
+    (cats, cats.map(c => ref.kindHist.getOrElse(c, 0L)).toArray)
+  }
+
   /** Chi-squared homogeneity test on the span-kind histogram (E8). Exact
     * counts from the stats pass; p via the regularized incomplete gamma. */
   def chi2(runId: String, alpha: Double, ref: RefState,
            summaries: Map[Int, PartSummary]): Seq[Verdict] = {
-    val cats = (ref.kindHist.keySet ++ summaries.values.flatMap(_.kindHist.keySet)).toSeq.sorted
-    val refCounts = cats.map(c => ref.kindHist.getOrElse(c, 0L)).toArray
+    val (cats, refCounts) = kindUniverse(ref, summaries)
     summaries.toSeq.sortBy(_._1).map { case (part, s) =>
       val prodCounts = cats.map(c => s.kindHist.getOrElse(c, 0L)).toArray
       val (stat, p) = StatMath.chi2TwoSample(refCounts, prodCounts)
@@ -105,18 +114,30 @@ object DriftChecks {
     * without the exact grid. */
   def psi(runId: String, alpha: Double, ref: RefState,
           summaries: Map[Int, PartSummary], buckets: Int = 10): Seq[Verdict] = {
-    val qs = Array.tabulate(buckets - 1)(i => (i + 1).toDouble / buckets)
-    lazy val kllEdges = KllOps.quantiles(ref.kllBytes, qs)
-    lazy val refCdf = KllOps.cdf(ref.kllBytes)
-    def kllProps(cdf: Double => Double): Array[Double] = {
+    val b = new PsiBuckets(ref, buckets)
+    summaries.toSeq.sortBy(_._1).map { case (part, s) =>
+      val (_, refProps, prodProps, exact) = b.of(s)
+      val v = StatMath.psi(refProps, prodProps)
+      val pseudoP = 1.0 - math.min(v / 0.2, 1.0)
+      Verdict.now(runId, part, "psi_offset", alpha, v, pseudoP, None,
+        Map("psi" -> v, "buckets" -> buckets.toDouble) ++
+          (if (exact) Map("exact_cdf" -> 1.0) else Map.empty), ref.snapshotId)
+    }
+  }
+
+  /** The reference-decile buckets of [[psi]] and [[psiAttribution]]. */
+  private final class PsiBuckets(ref: RefState, buckets: Int) {
+    private lazy val kllEdges =
+      KllOps.quantiles(ref.kllBytes, Array.tabulate(buckets - 1)(i => (i + 1).toDouble / buckets))
+    private def kllProps(cdf: Double => Double): Array[Double] = {
       val cum = kllEdges.map(cdf) :+ 1.0
       cum.zip(0.0 +: cum.dropRight(1)).map { case (hi, lo) => math.max(hi - lo, 0.0) }
     }
-    lazy val kllRefProps = kllProps(refCdf)
+    private lazy val kllRefProps = kllProps(KllOps.cdf(ref.kllBytes))
     // exact-path decile boundaries: distinct grid indices j_i = smallest j
     // with refEdgeCum(j)*buckets >= i*nRef, i = 1..buckets-1 (collapsed
     // boundaries merge buckets on BOTH sides identically)
-    lazy val (exactIdx, exactRefProps): (Array[Int], Array[Double]) = {
+    private lazy val (exactIdx, exactRefProps): (Array[Int], Array[Double]) = {
       val nRef = ref.refEdgeCum(ref.refEdgeCum.length - 1)
       val idxB = Array.newBuilder[Int]
       var last = -1
@@ -133,7 +154,11 @@ object DriftChecks {
         .map { case (hi, lo) => (hi - lo).toDouble / nRef }
       (idx, props)
     }
-    summaries.toSeq.sortBy(_._1).map { case (part, s) =>
+
+    /** One part's (bucket upper edges, reference proportions, the part's
+      * proportions, exact grid?): exact when both sides carry the fixed
+      * grid, else from the two KLL CDFs. */
+    def of(s: PartSummary): (Array[Double], Array[Double], Array[Double], Boolean) =
       if (exactCdf(ref, s)) {
         val (cum, nProd) = prodCum(s)
         val cumSel = exactIdx.map(cum) :+ nProd
@@ -141,19 +166,8 @@ object DriftChecks {
           if (nProd == 0) new Array[Double](cumSel.length)
           else cumSel.zip(0L +: cumSel.dropRight(1))
             .map { case (hi, lo) => (hi - lo).toDouble / nProd }
-        val v = StatMath.psi(exactRefProps, prodProps)
-        val pseudoP = 1.0 - math.min(v / 0.2, 1.0)
-        Verdict.now(runId, part, "psi_offset", alpha, v, pseudoP, None,
-          Map("psi" -> v, "buckets" -> buckets.toDouble, "exact_cdf" -> 1.0),
-          ref.snapshotId)
-      } else {
-        val prodProps = kllProps(KllOps.cdf(s.offsetKll))
-        val v = StatMath.psi(kllRefProps, prodProps)
-        val pseudoP = 1.0 - math.min(v / 0.2, 1.0)
-        Verdict.now(runId, part, "psi_offset", alpha, v, pseudoP, None,
-          Map("psi" -> v, "buckets" -> buckets.toDouble), ref.snapshotId)
-      }
-    }
+        (exactIdx.map(ref.offsetEdges), exactRefProps, prodProps, true)
+      } else (kllEdges, kllRefProps, kllProps(KllOps.cdf(s.offsetKll)), false)
   }
 
   /** One chi² attribution row: how much one span-kind category contributed
@@ -181,8 +195,7 @@ object DriftChecks {
     * O(parts × kinds), no jobs. */
   def chi2Attribution(ref: RefState,
                       summaries: Map[Int, PartSummary]): Seq[KindAttribution] = {
-    val cats = (ref.kindHist.keySet ++ summaries.values.flatMap(_.kindHist.keySet)).toSeq.sorted
-    val refCounts = cats.map(c => ref.kindHist.getOrElse(c, 0L)).toArray
+    val (cats, refCounts) = kindUniverse(ref, summaries)
     val nRef = refCounts.map(_.toDouble).sum
     summaries.toSeq.sortBy(_._1).flatMap { case (part, s) =>
       val prodCounts = cats.map(c => s.kindHist.getOrElse(c, 0L)).toArray
@@ -210,31 +223,6 @@ object DriftChecks {
     * psi_offset distance BIT FOR BIT (spec-pinned law). */
   def psiAttribution(ref: RefState, summaries: Map[Int, PartSummary],
                      buckets: Int = 10): Seq[BucketAttribution] = {
-    val qs = Array.tabulate(buckets - 1)(i => (i + 1).toDouble / buckets)
-    lazy val kllEdges = KllOps.quantiles(ref.kllBytes, qs)
-    lazy val refCdf = KllOps.cdf(ref.kllBytes)
-    def kllProps(cdf: Double => Double): Array[Double] = {
-      val cum = kllEdges.map(cdf) :+ 1.0
-      cum.zip(0.0 +: cum.dropRight(1)).map { case (hi, lo) => math.max(hi - lo, 0.0) }
-    }
-    lazy val kllRefProps = kllProps(refCdf)
-    lazy val (exactIdx, exactRefProps): (Array[Int], Array[Double]) = {
-      val nRef = ref.refEdgeCum(ref.refEdgeCum.length - 1)
-      val idxB = Array.newBuilder[Int]
-      var last = -1
-      var i = 1
-      var j = 0
-      while (i <= buckets - 1) {
-        while (j < ref.refEdgeCum.length && ref.refEdgeCum(j) * buckets < i.toLong * nRef) j += 1
-        if (j < ref.refEdgeCum.length && j != last) { idxB += j; last = j }
-        i += 1
-      }
-      val idx = idxB.result()
-      val cumSel = idx.map(ref.refEdgeCum) :+ nRef
-      val props = cumSel.zip(0L +: cumSel.dropRight(1))
-        .map { case (hi, lo) => (hi - lo).toDouble / nRef }
-      (idx, props)
-    }
     def rows(part: Int, edges: Array[Double], refProps: Array[Double],
              prodProps: Array[Double]): Seq[BucketAttribution] = {
       val cs = StatMath.psiContributions(refProps, prodProps)
@@ -248,18 +236,10 @@ object DriftChecks {
           if (psi != 0.0) cs(i) / psi else 0.0)
       }
     }
+    val b = new PsiBuckets(ref, buckets)
     summaries.toSeq.sortBy(_._1).flatMap { case (part, s) =>
-      if (exactCdf(ref, s)) {
-        val (cum, nProd) = prodCum(s)
-        val cumSel = exactIdx.map(cum) :+ nProd
-        val prodProps =
-          if (nProd == 0) new Array[Double](cumSel.length)
-          else cumSel.zip(0L +: cumSel.dropRight(1))
-            .map { case (hi, lo) => (hi - lo).toDouble / nProd }
-        rows(part, exactIdx.map(ref.offsetEdges), exactRefProps, prodProps)
-      } else {
-        rows(part, kllEdges, kllRefProps, kllProps(KllOps.cdf(s.offsetKll)))
-      }
+      val (edges, refProps, prodProps, _) = b.of(s)
+      rows(part, edges, refProps, prodProps)
     }
   }
 
@@ -322,8 +302,7 @@ object DriftChecks {
     * Same index-gate convention as PSI: p = 1 − min(jsd/0.1, 1). */
   def jsd(runId: String, alpha: Double, ref: RefState,
           summaries: Map[Int, PartSummary]): Seq[Verdict] = {
-    val cats = (ref.kindHist.keySet ++ summaries.values.flatMap(_.kindHist.keySet)).toSeq.sorted
-    val refCounts = cats.map(c => ref.kindHist.getOrElse(c, 0L)).toArray
+    val (cats, refCounts) = kindUniverse(ref, summaries)
     summaries.toSeq.sortBy(_._1).map { case (part, s) =>
       val prodCounts = cats.map(c => s.kindHist.getOrElse(c, 0L)).toArray
       val v = StatMath.jsd(refCounts, prodCounts)
@@ -658,61 +637,63 @@ object DriftChecks {
     * (fit: ml/training.py:131-147; compare: detector_api/app/detector.py:58-60;
     * 100-permutation test seeded with random_state=31: ml/training.py:136-144).
     *
-    * Distributed shape: the samples are broadcast and each part's
-    * permutation ids 0..numPermutations (0 = the observed, identity split)
-    * are cut into chunks of `permsPerTask`; each chunk is its own Spark
-    * partition (one task), so the scheduler balances chunks across cores
-    * rather than contiguous slices of them. A chunk's task evaluates the
-    * observed split plus its chunk in one [[Mmd.permutationStats]] pass and
-    * emits (part, observed, #perm-stats ≥ observed). The default chunk
-    * holds the whole default test (observed + 100), so each part costs one
-    * task and one kernel pass; smaller chunks spread a few parts over more
-    * cores at one extra kernel pass per chunk. Permutation seeds derive
-    * from (randomState, part, permId) ([[Mmd.permutationSeed]]), and the
-    * observed statistic does not depend on its chunk, so p-values are
-    * identical at any chunking and parallelism. Driver traffic is
-    * O(chunks), never O(parts × permutations).
-    * p = #{perm ≥ observed} / numPermutations — the plain proportion, as in
-    * [[Mmd.permutationTest]].
+    * Distributed shape: each part's permutation ids 0..numPermutations
+    * (0 = the observed, identity split) are cut into chunks of
+    * `permsPerTask`, and each chunk is its own Spark partition (one task),
+    * so the scheduler balances chunks across cores rather than contiguous
+    * slices of them. A chunk's task evaluates the observed split plus its
+    * chunk in one [[Mmd.permutationStats]] pass and emits (part, observed,
+    * #perm-stats ≥ observed). The default chunk holds the whole default test
+    * (observed + 100), so each part costs one task and one kernel pass;
+    * smaller chunks spread a few parts over more cores at one extra kernel
+    * pass per chunk. Permutation seeds derive from (randomState, part,
+    * permId) ([[Mmd.permutationSeed]]), and the observed statistic does not
+    * depend on its chunk, so p-values are identical at any chunking and
+    * parallelism. Driver traffic is O(chunks), never O(parts ×
+    * permutations). p = #{perm ≥ observed} / numPermutations — the plain
+    * proportion, as in [[Mmd.permutationTest]].
     *
-    * The samples reach the driver through the fused scan's collect, so the
-    * driver holds parts × maxSample × 6 doubles of them (and broadcasts
-    * them); past ~10³–10⁴ parts per call, validate in batches with
-    * `ValidationRun.runResumable(limitParts = N)`.
+    * This entry point ships the caller's in-memory `samples` to the tasks;
+    * ValidationRun's fan-out ([[mmdOn]]) runs the same body over samples
+    * that never leave the executors.
     */
   def mmd(spark: SparkSession, runId: String, alpha: Double, ref: RefState,
           samples: Map[Int, Array[Array[Double]]],
           numPermutations: Int = 100, randomState: Long = 31L,
-          permsPerTask: Int = 101): Seq[Verdict] = {
+          permsPerTask: Int = 101): Seq[Verdict] =
+    mmdOn(runId, alpha, ref, samples.keys.toSeq.sorted,
+      spark.sparkContext.parallelize(samples.toSeq, math.max(1, samples.size)),
+      numPermutations, randomState, permsPerTask)
+
+  /** [[mmd]] over (part, sample) rows wherever they live: each sample moves
+    * (one shuffle) to its part's chunk tasks, and the reference sample with
+    * σ is the only broadcast. `parts` lists every part the rows hold. */
+  private[graft] def mmdOn(runId: String, alpha: Double, ref: RefState, parts: Seq[Int],
+                           samples: RDD[(Int, Array[Array[Double]])],
+                           numPermutations: Int, randomState: Long,
+                           permsPerTask: Int = 101): Seq[Verdict] = {
     requirePermutations(numPermutations)
     require(permsPerTask >= 1, s"mmd: permsPerTask must be >= 1, got $permsPerTask")
-    val parts = samples.keys.toSeq.sorted
-    // one flat row-major array per sample: it serializes into the broadcast
-    // as a single primitive block instead of one object per row
-    val d = (ref.refSample.iterator ++ samples.valuesIterator.flatten)
-      .nextOption().fold(0)(_.length)
-    val bc = spark.sparkContext.broadcast((FlatRows.of(ref.refSample, d), ref.sigma,
-      samples.map { case (p, s) => p -> FlatRows.of(s, d) }))
     val perPart = numPermutations + 1 // permId 0 = observed (identity split)
-    val chunks = for {
-      part <- parts
-      s <- 0 until perPart by permsPerTask
-    } yield (part, s, math.min(s + permsPerTask, perPart))
-    // one partition per chunk, so the scheduler balances chunks, not slices
-    val partials = spark.sparkContext.parallelize(chunks, math.max(1, chunks.size))
-      .mapPartitions { it =>
-        val (refSample, sigma, prodSamples) = bc.value
-        it.map { case (part, s, e) =>
-          val prod = prodSamples(part)
-          val pool = Array.tabulate(refSample.rows + prod.rows)(i =>
-            if (i < refSample.rows) refSample.row(i) else prod.row(i - refSample.rows))
-          val (obs, ge) = observedAndExceedances(pool, refSample.rows, sigma, part,
-            s, e, randomState)
-          (part, obs, ge)
-        }
+    val chunksPerPart = (perPart + permsPerTask - 1) / permsPerTask
+    val index = parts.zipWithIndex.toMap
+    val bc = samples.sparkContext.broadcast((ref.refSample, ref.sigma))
+    val partials = try samples
+      .flatMap { case (part, sample) =>
+        (0 until chunksPerPart).map(c => (index(part) * chunksPerPart + c, (part, sample)))
+      }
+      // chunk ids are 0 until parts × chunksPerPart, and HashPartitioner
+      // puts Int key k in partition k: one task per chunk
+      .partitionBy(new HashPartitioner(math.max(1, parts.size * chunksPerPart)))
+      .map { case (chunk, (part, prod)) =>
+        val (refSample, sigma) = bc.value
+        val s = chunk % chunksPerPart * permsPerTask
+        val (obs, ge) = observedAndExceedances(refSample ++ prod, refSample.length,
+          sigma, part, s, math.min(s + permsPerTask, perPart), randomState)
+        (part, obs, ge, prod.length)
       }
       .collect()
-    bc.destroy()
+    finally bc.destroy()
 
     val byPart = partials.groupBy(_._1)
     parts.map { part =>
@@ -723,28 +704,8 @@ object DriftChecks {
 
       Verdict.now(runId, part, "mmd_features", alpha, obs, p, None,
         Map("sigma" -> ref.sigma, "n_ref" -> ref.refSample.length.toDouble,
-          "n_prod" -> samples(part).length.toDouble,
+          "n_prod" -> rows.head._4.toDouble,
           "permutations" -> numPermutations.toDouble), ref.snapshotId)
-    }
-  }
-
-  /** `rows` rows of width `d`, row-major in `values` — the broadcast shape
-    * of an MMD sample. */
-  private final case class FlatRows(rows: Int, d: Int, values: Array[Double]) {
-    def row(i: Int): Array[Double] = java.util.Arrays.copyOfRange(values, i * d, (i + 1) * d)
-  }
-
-  private object FlatRows {
-    def of(sample: Array[Array[Double]], d: Int): FlatRows = {
-      val values = new Array[Double](sample.length * d)
-      var i = 0
-      while (i < sample.length) {
-        require(sample(i).length == d,
-          s"mmd: sample rows must share one width, got ${sample(i).length} and $d")
-        System.arraycopy(sample(i), 0, values, i * d, d)
-        i += 1
-      }
-      FlatRows(sample.length, d, values)
     }
   }
 

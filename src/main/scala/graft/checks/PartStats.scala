@@ -1,9 +1,12 @@
 package graft.checks
 
+import org.apache.spark.SparkException
 import org.apache.spark.broadcast.Broadcast
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions._
+import org.apache.spark.util.SizeEstimator
 import graft.sketch.{KllOps, KllSketchAgg, LongHashSet}
 
 /** Per-partition summary statistics, computed in ONE scan + one shuffle.
@@ -38,8 +41,8 @@ case class PartSummary(
 
 object PartStats {
 
-  /** The fused aggregation frame shared by [[computeFused]] and
-    * [[computeFusedTree]] (and dumped by graft.tools.PlanDump).
+  /** The fused aggregation frame behind [[digests]] (and dumped by
+    * graft.tools.PlanDump).
     *
     * The field-array extractions (`spans.kind` / `spans.offset` /
     * `spans.media_ref`) and the sampling hash are PRE-PROJECTED below the
@@ -70,98 +73,66 @@ object PartStats {
         mediaSet = mediaSet, edges = edges).as("st"))
   }
 
+  /** The fused scan's per-part digests, decoded where they live: one
+    * (summary, bounded MMD sample) per part. Building the RDD runs the
+    * scan's map stage once (under AQE at this call; otherwise in the first
+    * job); every job over it re-reads that stage's shuffle output, so only
+    * the final merge and this decode repeat, never the scan. ValidationRun
+    * brings back just the summaries ([[summariesWithin]]) and fans the MMD
+    * test out over the samples where they are; [[computeFused]] collects
+    * both. */
+  private[graft] def digests(docs: DataFrame, maxSample: Int, mode: Int,
+                             mediaSet: Option[Broadcast[LongHashSet]],
+                             edges: Seq[Double]): RDD[(PartSummary, Array[Array[Double]])] =
+    fusedFrame(docs, maxSample, mode, mediaSet, edges).queryExecution.toRdd.map { r =>
+      val p = r.getInt(0)
+      val d = graft.sketch.DocStatsBuffer.decodeResult(r.getBinary(1))
+      (PartSummary(p, d.nDocs, d.nSpans, -1L, d.nullKindSpans, d.kindHist,
+        d.kllBytes, d.ordViolationDocs, d.nullKindDocs,
+        d.danglingRefSpans, d.danglingRefDocs, d.offsetEdgeCounts), d.sample)
+    }
+
   /** ONE-pass fused computation of per-partition summaries AND the bounded
     * MMD feature samples, via the custom [[graft.sketch.DocStatsAgg]]: no
     * explode, no second sampling scan, single groupBy(part) shuffle of
-    * O(tasks × parts × bufferBytes). The workhorse of the validation pass. */
+    * O(tasks × parts × bufferBytes). Collects every part's [[digests]] row,
+    * samples included, to the driver. */
   def computeFused(docs: DataFrame, maxSample: Int = 1000,
                    mode: Int = graft.sketch.DocStatsAgg.ModeBoth,
                    mediaSet: Option[org.apache.spark.broadcast.Broadcast[graft.sketch.LongHashSet]] = None,
                    edges: Seq[Double] = Nil)
       : (Map[Int, PartSummary], Map[Int, Array[Array[Double]]]) = {
-    val rows = fusedFrame(docs, maxSample, mode, mediaSet, edges)
-      .collect()
-    val decoded = rows.map { r =>
-      r.getInt(0) -> graft.sketch.DocStatsBuffer.decodeResult(r.getAs[Array[Byte]]("st"))
-    }
-    val summaries = decoded.map { case (p, d) =>
-      p -> PartSummary(p, d.nDocs, d.nSpans, -1L, d.nullKindSpans, d.kindHist,
-        d.kllBytes, d.ordViolationDocs, d.nullKindDocs,
-        d.danglingRefSpans, d.danglingRefDocs, d.offsetEdgeCounts)
-    }.toMap
-    val samples = decoded.map { case (p, d) => p -> d.sample }.toMap
-    (summaries, samples)
+    val rows = digests(docs, maxSample, mode, mediaSet, edges).collect()
+    (rows.map { case (s, _) => s.part -> s }.toMap,
+      rows.map { case (s, sample) => s.part -> sample }.toMap)
   }
 
-  /** Two-level ("tree") variant of [[computeFused]] for snapshots with
-    * 10⁴–10⁵ partitions in ONE call.
-    *
-    * [[computeFused]] collects one digest row per part in a single
-    * `collect()`: at 10⁵ parts × up to ~0.5 MB/digest (KLL + histograms +
-    * bounded sample) that is a single driver action materializing every
-    * task-result block at once — it trips `spark.driver.maxResultSize`
-    * (default 1g) long before heap, and briefly holds raw blocks AND decoded
-    * maps (~2× footprint). This variant adds a second ObjectHashAggregate
-    * stage that pre-merges the per-part digest rows into one row per PART
-    * RANGE (`fanIn` parts each, `collect_list` of the stage-1 buffers — the
-    * input to stage 2 is parts rows, tiny), then the driver consumes ranges
-    * via `toLocalIterator`: one range (≤ fanIn × digest bytes) is fetched
-    * and decoded at a time, so neither maxResultSize nor the collect's 2×
-    * duplication applies. Stage 1 is the IDENTICAL aggregation, so results
-    * equal [[computeFused]]'s exactly (PartStatsTreeSpec).
-    *
-    * The RETURNED maps still hold every part's summary+sample — that is what
-    * the caller asked for; for runs where even the decoded result exceeds
-    * driver memory, combine with a smaller `maxSample` or the batched
-    * `runResumable(limitParts=N)` invocation pattern (SURVEY.md §8b). */
-  def computeFusedTree(docs: DataFrame, maxSample: Int = 1000,
-                       mode: Int = graft.sketch.DocStatsAgg.ModeBoth,
-                       mediaSet: Option[org.apache.spark.broadcast.Broadcast[graft.sketch.LongHashSet]] = None,
-                       fanIn: Int = 64, fetchPartitions: Int = 0,
-                       edges: Seq[Double] = Nil)
-      : (Map[Int, PartSummary], Map[Int, Array[Array[Double]]]) = {
-    require(fanIn >= 1 && fetchPartitions >= 0)
-    val spark = docs.sparkSession
-    import spark.implicits._
-    // fetchPartitions = 0 (auto) → the session shuffle width: toLocalIterator
-    // runs ONE job per partition, so a large fixed width would schedule
-    // hundreds of near-empty sequential mini-jobs on small runs. Per-fetch
-    // driver bytes ≈ parts/width × digest — at the default widths that is
-    // well under driver.maxResultSize through ~10⁵ parts; extreme-scale
-    // callers size it explicitly (width ≈ parts × digestBytes / 200 MB).
-    val fetchWidth =
-      if (fetchPartitions > 0) fetchPartitions
-      else math.max(spark.sessionState.conf.numShufflePartitions, 1)
-    val stage1 = fusedFrame(docs, maxSample, mode, mediaSet, edges)
-    // toLocalIterator fetches one whole shuffle PARTITION per job, not one
-    // row — so the driver-residency bound is set by the stage-2 partition
-    // width, not by fanIn alone (at the default shuffle width a 10⁵-part
-    // run would still fetch GBs per job). The explicit repartition by range
-    // key REPLACES the groupBy's own exchange (same data volume, chosen
-    // width: Catalyst sees the distribution already satisfied) and bounds
-    // each fetch to ≈ parts/fetchPartitions digests — e.g. 10⁵ parts / 256
-    // ≈ 390 × 0.5 MB ≈ 0.2 GB per job, under the default
-    // driver.maxResultSize.
-    val ranged = stage1
-      .withColumn("rng", floor($"part" / fanIn).cast("int"))
-      .repartition(fetchWidth, $"rng")
-      .groupBy($"rng")
-      .agg(collect_list(struct($"part", $"st")).as("digests"))
-    val sumB = Map.newBuilder[Int, PartSummary]
-    val samB = Map.newBuilder[Int, Array[Array[Double]]]
-    val it = ranged.toLocalIterator()
-    while (it.hasNext) {
-      val row = it.next()
-      row.getSeq[org.apache.spark.sql.Row](row.fieldIndex("digests")).foreach { r =>
-        val p = r.getInt(0)
-        val d = graft.sketch.DocStatsBuffer.decodeResult(r.getAs[Array[Byte]](1))
-        sumB += p -> PartSummary(p, d.nDocs, d.nSpans, -1L, d.nullKindSpans,
-          d.kindHist, d.kllBytes, d.ordViolationDocs, d.nullKindDocs,
-          d.danglingRefSpans, d.danglingRefDocs, d.offsetEdgeCounts)
-        samB += p -> d.sample
-      }
-    }
-    (sumB.result(), samB.result())
+  /** The summaries of [[digests]], without their samples: each task sends
+    * its parts' summaries (a few KB each) and their estimated heap size;
+    * the driver adds the sizes up as tasks finish and fails the run once
+    * they pass `budget` bytes, naming the batched entry point, instead of
+    * holding an unbounded map. */
+  private[graft] def summariesWithin(digests: RDD[(PartSummary, Array[Array[Double]])],
+                                     budget: Long): Map[Int, PartSummary] = {
+    var bytes = 0L
+    var over: Throwable = null
+    val kept = Map.newBuilder[Int, PartSummary]
+    try digests.sparkContext.runJob(digests,
+      (it: Iterator[(PartSummary, Array[Array[Double]])]) => {
+        val s = it.map(_._1).toArray
+        (SizeEstimator.estimate(s), s)
+      }, (_: Int, res: (Long, Array[PartSummary])) => if (over == null) {
+        bytes += res._1
+        if (bytes > budget) {
+          over = new IllegalStateException(s"the part summaries passed the " +
+            s"driver budget of $budget B - validate the snapshot in batches " +
+            "with ValidationRun.runResumable(limitParts = N)")
+          throw over
+        }
+        res._2.foreach(s => kept += s.part -> s)
+      })
+    catch { case e: SparkException if over != null => throw over }
+    kept.result()
   }
 
   /** Broadcast the (small) media catalog as a primitive hash-set of

@@ -40,12 +40,6 @@ case class RunConfig(
     // app/api.py:41-42). Off by default: the echo multiplies verdict-row
     // width by the sample size.
     echoInputValues: Boolean = false,
-    // Some(fanIn): fused stats/sample digests travel to the driver through
-    // the two-level tree merge (PartStats.computeFusedTree) — one bounded
-    // part-range row at a time instead of one all-parts collect. Set for
-    // snapshots with 10^4+ partitions per run() call; None (default) keeps
-    // the direct collect, which is faster at ordinary partition counts.
-    treeMergeFanIn: Option[Int] = None,
     // referential-path AUTO-selection bound (E6): when run()'s
     // broadcastMedia is left None, the media catalog broadcasts only if its
     // plan-estimated size is at or below this; larger catalogs take the
@@ -85,16 +79,18 @@ case class RunConfig(
   * Pass structure over the big table (everything else runs on tiny
   * summaries); independent jobs are submitted concurrently:
   *   1. fused scan  — ONE DocStatsAgg pass (no explode) yields per-part
-  *      stats, the exact reference-grid offset CDF, span-order/null-kind
-  *      counts, the bounded deterministic MMD sample, and dangling-ref
-  *      counts probed against the broadcast media set
+  *      digests: stats, the exact reference-grid offset CDF,
+  *      span-order/null-kind counts, the bounded deterministic MMD sample,
+  *      and dangling-ref counts probed against the broadcast media set
   *   2. uniqueness  — one doc_id key exchange feeding one map pass (zero
   *      exchanges on a doc_id-bucketed table)
   *   3. violation rows — pruned rescans of the dirty partitions only
-  * plus the permutation fan-out (`DriftChecks.mmd`) on the samples the
-  * scan's collect brought to the driver, broadcast back (no table scan). A
-  * catalog too big to broadcast moves referential off the scan into its own
-  * job (probe-side broadcast or shuffled anti-join).
+  * Two jobs read the scan's digests where they live: one brings back the
+  * summaries only, within a driver budget, and the permutation fan-out
+  * (`DriftChecks.mmd`) runs on the samples without a table scan; the
+  * samples reach the driver only for `echoInputValues`. A catalog too big
+  * to broadcast moves referential off the scan into its own job
+  * (probe-side broadcast or shuffled anti-join).
   */
 object ValidationRun {
 
@@ -159,7 +155,21 @@ object ValidationRun {
     * force a path; a forced broadcast still fails loud at the
     * broadcastMediaSet entry cap instead of OOMing. */
   def run(docs: DataFrame, media: DataFrame, ref: RefState, cfg: RunConfig,
-          broadcastMedia: Option[Boolean] = None): Results = {
+          broadcastMedia: Option[Boolean] = None): Results =
+    run(docs, media, ref, cfg, broadcastMedia, driverSummaryBudget(docs.sparkSession))
+
+  /** The driver bytes a run's part summaries may take: half of
+    * spark.driver.maxResultSize (unbounded when that is 0), the other half
+    * left to the task metrics Spark counts against the same cap and to the
+    * run's other collects. */
+  private def driverSummaryBudget(spark: SparkSession): Long = {
+    val cap = spark.sparkContext.getConf.getSizeAsBytes("spark.driver.maxResultSize", "1g")
+    if (cap <= 0) Long.MaxValue else cap / 2
+  }
+
+  /** [[run]] with the summaries' driver budget given in bytes. */
+  private[graft] def run(docs: DataFrame, media: DataFrame, ref: RefState, cfg: RunConfig,
+                         broadcastMedia: Option[Boolean], summaryBudget: Long): Results = {
     // config preconditions fail before any job or sink write starts
     DriftChecks.requirePermutations(cfg.numPermutations)
     val spark = docs.sparkSession
@@ -174,11 +184,14 @@ object ValidationRun {
     // (Sequential submission leaves cores idle in every job's tail.)
 
     // eager per-check violation writes (no-op without a sink); `ds` is
-    // built on the write's own thread, off the path to the MMD fan-out
+    // built on the write's own thread, off the path to the MMD fan-out. No
+    // write starts before the part summaries are in, so a run that fails
+    // its summary budget leaves the sink untouched
+    val summariesIn = scala.concurrent.Promise[Unit]()
     val sinkWrites = new java.util.concurrent.ConcurrentLinkedQueue[Future[Unit]]()
     def sinkWrite(name: String, ds: => Dataset[Violation]): Unit =
       cfg.violationsSink.foreach { sink =>
-        sinkWrites.add(Future(timed(s"write_viol_$name")(
+        sinkWrites.add(summariesIn.future.map(_ => timed(s"write_viol_$name")(
           writeViolations(ds, "overwrite", s"$sink/src=$name"))))
       }
 
@@ -266,21 +279,24 @@ object ValidationRun {
       }))
 
     // 1. ONE DocStatsAgg scan computes stats AND the MMD samples (ModeBoth,
-    // no explode); the MMD fan-out (pure compute on broadcast samples)
-    // chains after it. The fitted reference's exact CDF grid rides the scan
+    // no explode); only the summaries come back, and the MMD fan-out
+    // (pure compute on the samples, where the scan left them) chains after
+    // them. The fitted reference's exact CDF grid rides the scan
     // (fixed-edge integer bin counts) so the KS/PSI verdicts are
     // parallelism-invariant; empty when the fit ran without the grid (KLL
     // fallback)
     val refEdges: Seq[Double] = ref.offsetEdges.toSeq
-    val (summaries, samples) = timed("stats") {
-      cfg.treeMergeFanIn match {
-        case Some(fanIn) =>
-          PartStats.computeFusedTree(docs, cfg.maxSample, ModeBoth, mediaSet, fanIn,
-            edges = refEdges)
-        case None => PartStats.computeFused(docs, cfg.maxSample, ModeBoth, mediaSet,
-          edges = refEdges)
-      }
+    val (digests, summaries) = try timed("stats") {
+      val d = PartStats.digests(docs, cfg.maxSample, ModeBoth, mediaSet, refEdges)
+      (d, PartStats.summariesWithin(d, summaryBudget))
+    } catch { case e: Throwable =>
+      // the run fails here: no sink write starts, and its other jobs settle
+      summariesIn.failure(e)
+      (Seq(fUniq) ++ fRef ++ fKind).foreach(Await.ready(_, Duration.Inf))
+      throw e
     }
+    summariesIn.success(())
+    val samples = digests.map { case (s, sample) => s.part -> sample }
     // violation rows of the stats-derived checks: lazy datasets over the
     // dirty partitions only (pruned rescans — no-ops on a clean table).
     // Their counts come from the scan; the Datasets are built where they
@@ -313,9 +329,9 @@ object ValidationRun {
     // clobber the standalone path's rows
     if (fusedRefCounts.isDefined) sinkWrite("ref", fusedRefViol)
     sinkWrite("integrity", intViol)
-    val mmdVerdicts = timed("mmd_fanout")(DriftChecks.mmd(spark, cfg.runId, cfg.alpha,
-      ref, samples, cfg.numPermutations, cfg.randomState))
     val parts = summaries.keys.toSeq.sorted
+    val mmdVerdicts = timed("mmd_fanout")(DriftChecks.mmdOn(cfg.runId, cfg.alpha,
+      ref, parts, samples, cfg.numPermutations, cfg.randomState))
 
     val (uniqViol, uniqStats) = Await.result(fUniq, Duration.Inf)
     // exactly one of the two referential paths ran
@@ -372,8 +388,11 @@ object ValidationRun {
         // same exact kind histograms — zero extra jobs, bit-invariant
         DriftChecks.novelKind(cfg.runId, cfg.alpha, ref, summaries) ++
         (if (!cfg.echoInputValues) mmdVerdicts
-         else mmdVerdicts.map(v => v.copy(input_values =
-           samples.get(v.part).map(_.map(_.toSeq).toSeq))))
+         else {
+           val echoed = samples.collectAsMap()
+           mmdVerdicts.map(v => v.copy(input_values =
+             echoed.get(v.part).map(_.map(_.toSeq).toSeq)))
+         })
 
     // with a sink, every branch is already written (await the overlapped
     // writes before returning so callers see complete output); without one,

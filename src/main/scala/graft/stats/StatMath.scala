@@ -90,22 +90,6 @@ object StatMath {
     if (stat <= 0) 1.0 else gammaQ(df / 2.0, stat / 2.0)
   }
 
-  /** Pearson chi-squared statistic from observed/expected counts.
-    * Expected cells derived from pooled proportions; zero-expected cells skipped. */
-  def chi2Stat(observed: Array[Double], expected: Array[Double]): Double = {
-    require(observed.length == expected.length)
-    var s = 0.0
-    var i = 0
-    while (i < observed.length) {
-      if (expected(i) > 0) {
-        val d = observed(i) - expected(i)
-        s += d * d / expected(i)
-      }
-      i += 1
-    }
-    s
-  }
-
   /** Two-sample chi-squared homogeneity test on category counts.
     * Returns (statistic, pValue). Categories with zero pooled count dropped. */
   def chi2TwoSample(refCounts: Array[Long], prodCounts: Array[Long]): (Double, Double) = {

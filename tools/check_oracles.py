@@ -6,7 +6,7 @@ name — the same semantics CORRECTNESS_r{N}.json reports.
 
 Usage: python3 tools/check_oracles.py [sf_dir] [only_query ...]
 """
-import json, os, subprocess, sys, tempfile, glob
+import json, os, shutil, subprocess, sys, tempfile, glob
 
 import duckdb
 import pandas as pd
@@ -26,6 +26,16 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 require_fresh_classes(REPO)
 OUT = tempfile.mkdtemp(prefix="graft-verify-")
 
+
+def finish(code):
+    """Remove the Verify output on a clean exit; keep it for a failure."""
+    if code == 0:
+        shutil.rmtree(OUT, ignore_errors=True)
+    else:
+        print(f"[emulator] Verify output kept in {OUT}")
+    sys.exit(code)
+
+
 cp = f"{REPO}/target/scala-2.13/classes:" + ":".join(glob.glob("/opt/spark/jars/*.jar"))
 opens = ("--add-opens java.base/java.lang=ALL-UNNAMED --add-opens java.base/java.lang.invoke=ALL-UNNAMED "
          "--add-opens java.base/java.lang.reflect=ALL-UNNAMED --add-opens java.base/java.io=ALL-UNNAMED "
@@ -35,10 +45,11 @@ opens = ("--add-opens java.base/java.lang=ALL-UNNAMED --add-opens java.base/java
          "--add-opens java.base/sun.nio.cs=ALL-UNNAMED --add-opens java.base/sun.security.action=ALL-UNNAMED "
          "--add-opens java.base/sun.util.calendar=ALL-UNNAMED").split()
 env = dict(os.environ, SPARK_GRAFT_CPUS=os.environ.get("SPARK_GRAFT_CPUS", "8"))
+print(f"[emulator] Verify -> {OUT}")
 r = subprocess.run(["java", "-cp", cp] + opens + ["-Xmx8g", "graft.Verify", SF, OUT],
                    env=env, capture_output=True, text=True)
 if r.returncode != 0:
-    print(r.stdout[-3000:]); print(r.stderr[-3000:]); sys.exit(1)
+    print(r.stdout[-3000:]); print(r.stderr[-3000:]); finish(1)
 for line in r.stderr.splitlines():
     if "[verify]" in line:
         print(line)
@@ -101,4 +112,4 @@ for name in sorted(oracle):
         fails.append(name)
 
 print(f"\n{'ALL GREEN' if not fails else 'FAILURES: ' + ', '.join(fails)}")
-sys.exit(1 if fails else 0)
+finish(1 if fails else 0)

@@ -7,7 +7,7 @@ hash-oracled driver gate flake (the t-digest rank-gate lesson).
 
 Usage: python3 tools/determinism_audit.py [sf_dir]
 """
-import glob, os, subprocess, sys, tempfile
+import glob, os, shutil, subprocess, sys, tempfile
 
 import duckdb
 import pandas as pd
@@ -29,11 +29,21 @@ opens = ("--add-opens java.base/java.lang=ALL-UNNAMED --add-opens java.base/java
 env = dict(os.environ, SPARK_GRAFT_CPUS=os.environ.get("SPARK_GRAFT_CPUS", "8"))
 
 
+def finish(code):
+    """Remove both runs' output on a clean exit; keep them for a failure."""
+    if code == 0:
+        shutil.rmtree(a, ignore_errors=True)
+        shutil.rmtree(b, ignore_errors=True)
+    else:
+        print(f"[determinism] run outputs kept in {a} and {b}")
+    sys.exit(code)
+
+
 def run_verify(out):
     r = subprocess.run(["java", "-cp", cp] + opens + ["-Xmx8g", "graft.Verify", SF, out],
                        env=env, capture_output=True, text=True)
     if r.returncode != 0:
-        print(r.stdout[-3000:]); print(r.stderr[-3000:]); sys.exit(1)
+        print(r.stdout[-3000:]); print(r.stderr[-3000:]); finish(1)
 
 
 def canon(df: pd.DataFrame) -> pd.DataFrame:
@@ -68,4 +78,4 @@ for name in names:
 
 print(f"\n[determinism] {len(names)} queries, "
       f"{'ALL DETERMINISTIC' if not diffs else 'NON-DETERMINISTIC: ' + ', '.join(diffs)}")
-sys.exit(1 if diffs else 0)
+finish(1 if diffs else 0)
